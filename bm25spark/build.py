@@ -71,9 +71,6 @@ from .config import BLOCK_SIZE, FORMAT_MAGIC, FORMAT_VERSION, Bm25Config
 from .scoring import tf_score
 from .udfs import with_doc_terms
 
-#: tail-block (bytepacked) metadata flag — packing._BIT_FLAG
-_BYTE_FLAG = 1 << 7
-
 POSTINGS_SCHEMA = StructType(
     [
         StructField("term_key", BinaryType(), False),
@@ -318,23 +315,8 @@ def _blocks_from_arrays(
         vt = tfs_u32[tidx]
         sct = scores[tidx]
         fnt = fns_all[tidx]
-        # ordered-id deltas: first element vs block min (= itself -> 0)
-        prev = np.empty_like(it)
-        prev[0] = it[0]
-        prev[1:] = it[:-1]
-        d_ids = np.where(pos > 0, it - prev, np.uint32(0)).astype(np.uint32)
-        # bytewidths per group (OR of deltas / raw tfs, exactly
-        # packing._compress / compress_term_frequencies)
-        def _widths(vals: np.ndarray) -> np.ndarray:
-            orv = np.bitwise_or.reduceat(vals.astype(np.int64), flat0)
-            bl = np.where(
-                orv > 0, np.frexp(orv.astype(np.float64))[1], 0
-            ).astype(np.int64)
-            return np.maximum(1, (bl + 7) // 8)
-        w_ids = _widths(d_ids)
-        w_tfs = _widths(vt)
-        le_ids = d_ids.astype("<u4").view(np.uint8).reshape(-1, 4)
-        le_tfs = vt.astype("<u4").view(np.uint8).reshape(-1, 4)
+        ids_meta, ids_bytes = packing.compress_tail_blocks(it, t_len, ordered=True)
+        tfs_meta, tfs_bytes = packing.compress_tail_blocks(vt, t_len, ordered=False)
         # segmented argmax, first-max tie rule like np.argmax
         gmax = np.maximum.reduceat(sct, flat0)
         grp_rep = np.repeat(np.arange(len(tg)), t_len)
@@ -352,16 +334,10 @@ def _blocks_from_arrays(
         cols["wand_fn"].append(fnt[am_flat])
         cols["wand_tf"].append(vt[am_flat].astype(np.int64))
         cols["block_ub"].append(sct[am_flat])
-        cols["ids_meta"].append(_BYTE_FLAG | w_ids)
-        cols["ids_bytes"].extend(
-            le_ids[s:e, :w].tobytes()
-            for s, e, w in zip(flat0, ends, w_ids)
-        )
-        cols["tfs_meta"].append(_BYTE_FLAG | w_tfs)
-        cols["tfs_bytes"].extend(
-            le_tfs[s:e, :w].tobytes()
-            for s, e, w in zip(flat0, ends, w_tfs)
-        )
+        cols["ids_meta"].append(ids_meta)
+        cols["ids_bytes"].extend(ids_bytes)
+        cols["tfs_meta"].append(tfs_meta)
+        cols["tfs_bytes"].extend(tfs_bytes)
 
     for c in (
         "bucket", "shard", "block_ord", "min_doc", "max_doc", "count",

@@ -5,8 +5,9 @@ form"): term statistics broadcast from the driver (they are global —
 idf/avgdl must not vary per task), posting blocks of the query terms
 grouped by shard, the vectorized taat kernel run inside each task over
 its shard's blocks + fieldnorm slice, per-shard top-k unioned and cut
-to the global top-k by Spark's TakeOrderedAndProject. Per-shard
-thresholds start at 0 so the union provably contains the global top-k.
+to the global top-k per query by a window. Per-shard thresholds start
+at 0 so the union provably contains the global top-k. A single query
+is a batch of one.
 
 Work per task is bounded by shard_size regardless of term skew — the
 same property the build's (term, shard) grouping gives — so a 1000-
@@ -16,8 +17,6 @@ term's shards out, not by melting one task.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -25,22 +24,15 @@ from pyspark.sql import functions as F
 
 from .index import Bm25Index
 from .scoring import Cache
-from .wand import (
-    TermPostings,
-    _bytes_of,
-    prune_blocks,
-    prune_blocks_batch,
-    taat_topk,
-)
+from .wand import TermPostings, _bytes_of, prune_blocks_batch, taat_topk_batch
 
 #: decode pruning pays when the blocks it can skip are expensive to
 #: decompress (or, at scale, to READ — lazily-fetched blocks become
-#: skipped I/O); below this many packed posting bytes per query the
-#: vectorized decode is cheaper than the block-metadata pass, so the
-#: shard task decodes everything (both paths are exact — this is a
-#: pure latency knob). 100-TB-scale shards clear this by orders of
-#: magnitude; tune with BM25SPARK_PRUNE_MIN_BYTES (0 = always prune).
-PRUNE_MIN_BYTES = int(os.environ.get("BM25SPARK_PRUNE_MIN_BYTES", str(256 << 10)))
+#: skipped I/O); below this many packed posting bytes per shard task
+#: the vectorized decode is cheaper than the block-metadata pass, so
+#: the shard task decodes everything (both paths are exact — this is a
+#: pure latency knob; ``prune_min_bytes=0`` forces the pruned path).
+PRUNE_MIN_BYTES = 256 << 10
 
 
 class _OffsetMask:
@@ -117,8 +109,7 @@ def _termpostings_from_blocks(
     b: float,
 ) -> dict:
     """Assemble one shard's block rows into TermPostings, keyed by
-    term key in ascending key order (shared by the single-query and
-    batched kernels so the two paths cannot diverge).
+    term key in ascending key order.
     ``term_info``: key -> (df, wand_fn, wand_tf)."""
     pdf = pdf.sort_values(["term_key", "block_ord"], kind="stable")
     out: dict = {}
@@ -149,8 +140,7 @@ def _allowlist_frames(
     blocked: DataFrame | None,
     shard_size: int,
 ) -> tuple[DataFrame | None, bool]:
-    """Shared P3/P4 routing for the single-query and batched
-    distributed paths (so the two cannot diverge): returns
+    """P3/P4 routing for the distributed path: returns
     ``(allowed_df, mask_blocklist)`` where ``allowed_df`` is a
     per-shard (shard, doc_id) frame to cogroup into the kernel tasks.
 
@@ -199,139 +189,19 @@ def search_distributed(
     blocked: DataFrame | None = None,
     prune_min_bytes: int | None = None,
 ) -> DataFrame:
-    """-> DataFrame (payload cols..., score), best-first.
-
-    ``prune_min_bytes``: per-shard packed-byte threshold below which
-    the decode pre-cut is skipped (None = module default
-    PRUNE_MIN_BYTES; 0 = always prune). Both paths are exact.
-
-    ``prefilter``: optional DataFrame of allowed *payload key* rows —
-    the reference's bm25.prefilter (P3) in the scale path. Each shard
-    task receives its slice of allowed internal ids via a join against
-    the docs artifact, evaluated before candidates count toward k.
-
-    ``blocked``: optional DataFrame of tombstoned *internal doc ids*
-    (one ``doc_id`` column) — the reference's deleted-filter (P4,
-    bulkdelete.rs:20-112) in the scale path. Blocked ids route to their
-    shard's task through the same cogroup as the prefilter, and the
-    task builds an inverted (all-true) mask, so the cost is
-    O(tombstones), never O(n_docs) on the driver."""
-    idx = Bm25Index(spark, index_dir)
-    keys = idx.query_keys(query_text)
-    stats = idx.term_stats(keys)
-    present = sorted(key for key in keys if key in stats)
-    empty = spark.createDataFrame([], "doc_id BIGINT, score DOUBLE")
-    if not present:
-        return empty
-
-    n_docs, avgdl, k1, b = idx.n_docs, idx.avgdl, idx.k1, idx.b
-    shard_size = idx.shard_size
-    docs_path = idx._path("docs")
-
-    allowed_df, mask_blocklist = _allowlist_frames(
-        idx, prefilter, blocked, shard_size
-    )
-    term_info = {
-        key: (stats[key]["df"], stats[key]["wand_fn"], stats[key]["wand_tf"])
-        for key in present
-    }
-    # per-shard over-fetch: the shard heap cuts on *unrounded* scores,
-    # but the global limit orders by (rounded score, doc_id) — a doc
-    # whose raw score trails the k-th but rounds equal to it (and has a
-    # smaller doc_id) must survive the shard cut, so fetch k+slack per
-    # shard exactly like Bm25Index.search_df does
-    k_fetch = k + (128 if round_score is not None else 0)
-    binfo = spark.sparkContext.broadcast(
-        (term_info, n_docs, avgdl, k1, b, shard_size, docs_path, k_fetch,
-         PRUNE_MIN_BYTES if prune_min_bytes is None else prune_min_bytes)
-    )
-
-    buckets = idx._buckets(present)
-    blocks = (
-        idx.postings_df()
-        .filter(F.col("bucket").isin(buckets))
-        .filter(F.col("term_key").isin([bytearray(x) for x in present]))
-        .select(
-            "term_key", "shard", "block_ord", "min_doc", "max_doc", "count",
-            "wand_fn", "wand_tf", "ids_meta", "ids_bytes", "tfs_meta", "tfs_bytes",
-        )
-    )
-
-    def run_shard(key, pdf, allowed_pdf=None):
-        (term_info, n_docs, avgdl, k1, b, shard_size, docs_path, k,
-         prune_gate) = binfo.value
-        shard = int(key[0])
-        base = shard * shard_size
-        fns = _shard_fieldnorms(docs_path, shard, shard_size)
-        terms = list(
-            _termpostings_from_blocks(
-                pdf, base, term_info, n_docs, avgdl, k1, b
-            ).values()
-        )
-        allowed_mask = None
-        if allowed_pdf is not None:
-            # shard-local mask over global ids: allowlist = prefilter
-            # (P3), blocklist = tombstones (P4); an empty right side
-            # means "allow everything" for a blocklist and "allow
-            # nothing" for an allowlist — both fall out of the fill
-            allowed_mask = _OffsetMask(
-                base,
-                shard_size,
-                allowed_pdf["doc_id"].to_numpy(np.int64) - base,
-                blocklist=mask_blocklist,
-            )
-        # per-shard decode pre-cut (block-max metadata → θ-seeded
-        # exact pruning): blocks that provably cannot reach this
-        # shard's top-k are never decompressed; results bit-identical.
-        # Size-gated: tiny posting sets decode faster than they prune.
-        if sum(_bytes_of(t) for t in terms) >= prune_gate:
-            terms, _ = prune_blocks(terms, fns, k, allowed_mask=allowed_mask)
-        hits = taat_topk(terms, fns, k, allowed_mask=allowed_mask)
-        return pd.DataFrame(hits, columns=["doc_id", "score"])
-
-    out_schema = "doc_id BIGINT, score DOUBLE"
-    if allowed_df is None:
-        def run_grouped(key, pdf):
-            return run_shard(key, pdf, None)
-
-        per_shard = blocks.groupBy("shard").applyInPandas(run_grouped, out_schema)
-    else:
-        def run_cogrouped(key, left: pd.DataFrame, right: pd.DataFrame):
-            if left.empty:
-                return pd.DataFrame(columns=["doc_id", "score"])
-            return run_shard(key, left, right)
-
-        per_shard = (
-            blocks.groupBy("shard")
-            .cogroup(allowed_df.groupBy("shard"))
-            .applyInPandas(run_cogrouped, out_schema)
-        )
-    score_col = (
-        F.round(F.col("score"), round_score) if round_score is not None else F.col("score")
-    )
-    topk = (
-        per_shard.select("doc_id", score_col.alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
-    # J3: payload join on the dense id (internal id aliased so a
-    # payload column may itself be named doc_id)
-    docs = idx.docs_df().select(
-        F.col("doc_id").alias("_iid"),
-        *[F.col(f"p_{c}") for c in idx.payload_cols],
-    )
-    return (
-        # k-row side broadcast: the docs artifact is never shuffled
-        # for the payload lookup, only scanned (at scale this is the
-        # difference between a k-row map-side join and re-shuffling
-        # the whole corpus)
-        docs.join(F.broadcast(topk), topk["doc_id"] == docs["_iid"])
-        .select(
-            *[F.col(f"p_{c}").alias(c) for c in idx.payload_cols],
-            topk["score"],
-        )
-        .orderBy(F.desc("score"), *idx.payload_cols)
-    )
+    """-> DataFrame (payload cols..., score), best-first: one query as
+    a batch of one through :func:`search_distributed_batch` (same
+    options, same results)."""
+    return search_distributed_batch(
+        spark,
+        index_dir,
+        {"_": query_text},
+        k,
+        round_score=round_score,
+        prefilter=prefilter,
+        blocked=blocked,
+        prune_min_bytes=prune_min_bytes,
+    ).drop("query_id")
 
 
 def search_distributed_batch(
@@ -344,31 +214,69 @@ def search_distributed_batch(
     blocked: DataFrame | None = None,
     prune_min_bytes: int | None = None,
 ) -> DataFrame:
-    """Batched distributed top-k: M queries answered by ONE Spark job.
+    """Distributed top-k: M queries answered by ONE Spark job — the
+    one sealed-segment serving path (:func:`search_distributed` is a
+    batch of one).
 
-    The serving shape for query throughput on the scale path: per-query
-    job-scheduling overhead amortizes across the batch, each shard task
-    reads its posting blocks once (the union of all queries' terms,
-    still bucket/key-pruned), decodes each term once, and runs the
-    taat kernel once per query against the shared decoded arrays. The
-    per-shard output is O(M * k) rows; the global cut is a window per
-    query_id and the payload join broadcasts the M*k-row side.
+    Per-query job-scheduling overhead amortizes across the batch, each
+    shard task reads its posting blocks once (the union of all
+    queries' terms, still bucket/key-pruned), decodes each term once,
+    and runs the taat kernel once per query against the shared decoded
+    arrays. The per-shard output is O(M * k) rows; the global cut is a
+    window per query_id and the payload join broadcasts the M*k-row
+    side.
 
     ``queries``: {query_id: query_text}. Returns
     (query_id, payload cols..., score), ordered by
-    (query_id, score desc, payload cols) — per-query results identical
-    to :func:`search_distributed` (asserted in tests).
+    (query_id, score desc, payload cols).
 
-    ``prefilter``/``blocked`` carry the P3 allowlist (payload-key
-    rows) and P4 tombstones (internal ``doc_id`` rows) exactly as in
-    :func:`search_distributed` — the reference applies the deleted
-    filter on *every* scan (bulkdelete.rs:20-112, search.rs:112-118),
-    so the throughput-oriented batch path must too. One shared mask is
-    built per shard task and applied to every query in the batch.
+    ``prune_min_bytes``: per-shard packed-byte threshold below which
+    the decode pre-cut is skipped (None = PRUNE_MIN_BYTES; 0 = always
+    prune). Both paths are exact.
+
+    ``prefilter``: optional DataFrame of allowed *payload key* rows —
+    the reference's bm25.prefilter (P3). ``blocked``: optional
+    DataFrame of tombstoned *internal doc ids* (one ``doc_id`` column)
+    — the reference's deleted-filter (P4, bulkdelete.rs:20-112), which
+    it applies on *every* scan (search.rs:112-118). Both route to their
+    shard's task through one cogroup (see :func:`_allowlist_frames`);
+    one shared mask is built per shard task and applied to every query
+    in the batch, so the cost is O(tombstones), never O(n_docs) on the
+    driver.
     """
+    idx = Bm25Index(spark, index_dir)
+    return _ordered_by_query(
+        _sealed_topk_df(
+            idx, queries, k, round_score, prefilter, blocked, prune_min_bytes
+        ),
+        idx.payload_cols,
+    )
+
+
+def _ordered_by_query(df: DataFrame, payload_cols: list[str]) -> DataFrame:
+    """Order a (query_id, payload cols..., score) result of at most
+    M*k rows by (query_id, score desc, payload cols) in ONE task: a
+    global ``orderBy`` would first run a range-partition sampling job
+    over these few rows. ``repartition`` (not ``coalesce``) keeps the
+    upstream docs scan of the payload join parallel."""
+    return df.repartition(1).sortWithinPartitions(
+        "query_id", F.desc("score"), *payload_cols
+    )
+
+
+def _sealed_topk_df(
+    idx: Bm25Index,
+    queries: dict[str, str],
+    k: int,
+    round_score: int | None,
+    prefilter: DataFrame | None,
+    blocked: DataFrame | None,
+    prune_min_bytes: int | None,
+) -> DataFrame:
+    """:func:`search_distributed_batch` before the final ordering."""
     from pyspark.sql import Window
 
-    idx = Bm25Index(spark, index_dir)
+    spark = idx.spark
     all_keys: set[bytes] = set()
     qkeys: dict[str, list[bytes]] = {}
     for qid, text in queries.items():
@@ -383,12 +291,7 @@ def search_distributed_batch(
     qterms = {qid: keys for qid, keys in qterms.items() if keys}
     out_cols = "query_id STRING, doc_id BIGINT, score DOUBLE"
     if not qterms:
-        return spark.createDataFrame(
-            [],
-            f"query_id STRING, "
-            + ", ".join(f"{c} {idx.docs_df().schema[f'p_{c}'].dataType.simpleString()}" for c in idx.payload_cols)
-            + ", score DOUBLE",
-        )
+        return idx.empty_df(with_query_id=True)
 
     n_docs, avgdl, k1, b = idx.n_docs, idx.avgdl, idx.k1, idx.b
     shard_size = idx.shard_size
@@ -397,6 +300,11 @@ def search_distributed_batch(
         key: (stats[key]["df"], stats[key]["wand_fn"], stats[key]["wand_tf"])
         for key in present
     }
+    # per-shard over-fetch: the shard heap cuts on *unrounded* scores,
+    # but the global cut orders by (rounded score, doc_id) — a doc
+    # whose raw score trails the k-th but rounds equal to it (and has a
+    # smaller doc_id) must survive the shard cut, so fetch k+slack per
+    # shard exactly like Bm25Index.search_df does
     k_fetch = k + (128 if round_score is not None else 0)
     binfo = spark.sparkContext.broadcast(
         (
@@ -439,9 +347,11 @@ def search_distributed_batch(
         )
         allowed_mask = None
         if allowed_pdf is not None:
-            # ONE shard-local mask shared by every query in the batch
-            # (allowlist = prefilter P3, blocklist = tombstones P4 —
-            # same semantics as the single-query path's run_shard)
+            # ONE shard-local mask shared by every query in the batch:
+            # allowlist = prefilter (P3), blocklist = tombstones (P4);
+            # an empty right side means "allow everything" for a
+            # blocklist and "allow nothing" for an allowlist — both
+            # fall out of the fill
             allowed_mask = _OffsetMask(
                 base,
                 shard_size,
@@ -453,8 +363,8 @@ def search_distributed_batch(
         # only the UNION of kept blocks is ever decompressed — decoded
         # ONCE (shared cache) and reused by every query's kernel run;
         # per-query results stay bit-identical (see prune_blocks_batch).
-        # Size-gated like the single-query path: below the threshold,
-        # plain decode-once is faster than pruning.
+        # Size-gated: below the threshold, plain decode-once is faster
+        # than pruning.
         if sum(_bytes_of(t) for t in tps.values()) >= prune_gate:
             tps, _ = prune_blocks_batch(
                 tps, qterms, fns, k, allowed_mask=allowed_mask
@@ -462,14 +372,10 @@ def search_distributed_batch(
         else:
             for tp in tps.values():
                 tp.decoded = tp.decode_all()  # decode ONCE, reuse per query
-        out = []
-        for qid, keys in qterms.items():
-            terms = [tps[key] for key in keys if key in tps]
-            if not terms:
-                continue
-            for doc_id, score in taat_topk(terms, fns, k, allowed_mask=allowed_mask):
-                out.append((qid, doc_id, score))
-        return pd.DataFrame(out, columns=["query_id", "doc_id", "score"])
+        return pd.DataFrame(
+            taat_topk_batch(tps, qterms, fns, k, allowed_mask=allowed_mask),
+            columns=["query_id", "doc_id", "score"],
+        )
 
     if allowed_df is None:
         def run_batch_grouped(key, pdf):
@@ -503,16 +409,19 @@ def search_distributed_batch(
         .filter(F.col("_rn") <= k)
         .drop("_rn")
     )
+    # J3: payload join on the dense id (internal id aliased so a
+    # payload column may itself be named doc_id)
     docs = idx.docs_df().select(
         F.col("doc_id").alias("_iid"),
         *[F.col(f"p_{c}") for c in idx.payload_cols],
     )
     return (
+        # M*k-row side broadcast: the docs artifact is never shuffled
+        # for the payload lookup, only scanned
         docs.join(F.broadcast(topk), topk["doc_id"] == docs["_iid"])
         .select(
             "query_id",
             *[F.col(f"p_{c}").alias(c) for c in idx.payload_cols],
             topk["score"],
         )
-        .orderBy("query_id", F.desc("score"), *idx.payload_cols)
     )

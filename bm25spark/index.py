@@ -100,6 +100,26 @@ class Bm25Index:
     def lineage_df(self) -> DataFrame:
         return self.spark.read.parquet(self._path("lineage"))
 
+    def result_schema(self, with_query_id: bool = False):
+        """``([query_id,] payload cols..., score)`` — the schema of every
+        search result frame."""
+        from pyspark.sql.types import (
+            DoubleType, StringType, StructField, StructType,
+        )
+
+        payload = self.docs_df().select(
+            *[F.col(f"p_{c}").alias(c) for c in self.payload_cols]
+        ).schema.fields
+        return StructType(
+            ([StructField("query_id", StringType())] if with_query_id else [])
+            + list(payload)
+            + [StructField("score", DoubleType())]
+        )
+
+    def empty_df(self, with_query_id: bool = False) -> DataFrame:
+        """An empty search result (see :meth:`result_schema`)."""
+        return self.spark.createDataFrame([], self.result_schema(with_query_id))
+
     def query_keys(self, query_text: str) -> list[bytes]:
         return analyze_query(query_text, self.analyzer, self.seed)
 
@@ -329,7 +349,7 @@ class Bm25Index:
             hits.sort(key=lambda t: (-t[1], t[0]))
         hits = hits[:k]
         if not hits:
-            return self.spark.createDataFrame([], "doc_id BIGINT, score DOUBLE")
+            return self.empty_df()
         ids = [d for d, _ in hits]
         scores = {d: s for d, s in hits}
         pay = (
@@ -348,15 +368,7 @@ class Bm25Index:
         pdf_rows = [
             tuple(r[c] for c in self.payload_cols) + (r["score"],) for r in data
         ]
-        src_schema = self.docs_df().select(
-            *[F.col(f"p_{c}").alias(c) for c in self.payload_cols]
-        ).schema
-        from pyspark.sql.types import DoubleType, StructField, StructType
-
-        schema = StructType(
-            list(src_schema.fields) + [StructField("score", DoubleType())]
-        )
-        out = self.spark.createDataFrame(pdf_rows, schema)
+        out = self.spark.createDataFrame(pdf_rows, self.result_schema())
         if negate:
             out = out.withColumn("score", -F.col("score"))
         return out

@@ -16,15 +16,16 @@ maintain.rs:27-311):
   inserted after a DELETE is a new, visible tuple.
 - ``search_with_delta`` unions the distributed sealed search
   (tombstones shipped per shard as a blocklist mask, P4 — never an
-  O(n_docs) driver allocation) with Catalyst exact scoring of the
-  delta docs (Q4) — scored against the *sealed* statistics (N, avgdl,
-  df), exactly like the reference, whose growing-segment scan uses the
-  token dictionary and jump stats as of the last merge
+  O(n_docs) driver allocation) with the growing segment (Q4), scored
+  by the SAME ``taat_topk`` kernel: each partition of the live delta
+  is one pseudo-shard task, scored against the *sealed* statistics
+  (N, avgdl, df), exactly like the reference, whose growing-segment
+  scan uses the token dictionary and jump stats as of the last merge
   (search.rs:49-51,83-135). Terms absent from the sealed dictionary
   contribute nothing even if present in delta docs (search.rs:55-62).
-  Both legs are Spark jobs; nothing is collected except the final k
-  rows, so an un-compacted delta of 10M rows is scanned where it
-  lives, not on the driver.
+  Both legs are Spark tasks in one plan; nothing is collected except
+  the final k rows per query, so an un-compacted delta of 10M rows is
+  scanned where it lives, not on the driver.
 - ``vacuum``   compacts: drops tombstoned docs, relabels survivors to
   dense ids (the reference's relabel array, maintain.rs:330-362 — here
   the J4 relabel *join*), tokenizes and appends delta docs, re-runs the
@@ -42,11 +43,12 @@ import json
 import os
 import time
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from . import fs as fsio
-from .analyze import analyze_query, get_analyzer
 from .build import (
     _assign_doc_ids,
     _ensure_readable_parquet,
@@ -55,7 +57,6 @@ from .build import (
 )
 from .config import Bm25Config
 from .index import Bm25Index
-from .query import quantized_dl
 from .udfs import with_doc_terms
 
 #: auto-seal threshold (live delta rows) used when none is given —
@@ -560,141 +561,6 @@ def _live_delta(spark: SparkSession, idx: Bm25Index, index_dir: str) -> DataFram
     ).drop("_seq", "_rid")
 
 
-def _delta_topk_df(
-    spark: SparkSession,
-    idx: Bm25Index,
-    delta: DataFrame,
-    query_text: str,
-    k: int,
-    text_col: str,
-) -> DataFrame | None:
-    """Q4 distributed: exact-score the growing segment with the *sealed*
-    statistics (N, avgdl, per-term df from the sealed dictionary;
-    terms absent from it contribute nothing — search.rs:49-62,83-135).
-    Pure Catalyst: the fused tokenizer UDF is the only Python crossing;
-    tf extraction, quantized-length lookup, and scoring are codegen
-    expressions, and only the top-k rows leave the executors.
-
-    Returns (payload cols..., score) with *raw* float64 scores,
-    bit-compatible with the sealed kernel's Cache math (same operation
-    order), or ``None`` when no query term exists in the sealed
-    dictionary."""
-    import math
-
-    qkeys = analyze_query(query_text, get_analyzer(idx.meta["analyzer"]), idx.seed)
-    stats = idx.term_stats(qkeys)
-    present = [key for key in qkeys if key in stats]  # sorted (qkeys sorted)
-    if not present:
-        return None
-    pc = idx.payload_cols
-    k1, b, avgdl, n = idx.k1, idx.b, idx.avgdl, idx.n_docs
-    s0s = {
-        key: math.log((float(n) + 1.0) / (float(stats[key]["df"]) + 0.5))
-        * (k1 + 1.0)
-        for key in present
-    }
-
-    prep = with_doc_terms(delta, text_col, idx.meta["analyzer"], idx.seed)
-    # group on the unique per-row key (_rowid), NOT the payload
-    # columns: two live inserts sharing a payload key are two
-    # independent pseudo-docs (each with its own doc_len/tf), exactly
-    # as vacuum will score them once each has its own doc_id
-    m = prep.select(
-        "_rowid", *pc, "doc_len", F.explode("terms").alias("t")
-    ).select(
-        "_rowid",
-        *pc,
-        "doc_len",
-        F.col("t.key").alias("term_key"),
-        F.col("t.tf").alias("tf"),
-    )
-    # Cache math (scoring.py): s0 = idf*(k1+1); s1 = k1*(1-b+b*qdl/avgdl);
-    # contribution = tf*s0/(tf+s1) — identical operation order to the
-    # sealed kernel so merged rankings are float-consistent.
-    from .query import WIDE_QUERY_TERMS
-
-    s1_of = lambda qdl_col: F.lit(k1) * (  # noqa: E731
-        F.lit(1.0 - b) + F.lit(b) * qdl_col / F.lit(avgdl)
-    )
-    if len(present) <= WIDE_QUERY_TERMS:
-        per_doc = m.groupBy("_rowid").agg(
-            *[F.first(c).alias(c) for c in pc],
-            F.first("doc_len").cast("bigint").alias("doc_len"),
-            *[
-                F.coalesce(
-                    F.max(F.when(F.col("term_key") == F.lit(key), F.col("tf"))),
-                    F.lit(0),
-                )
-                .cast("bigint")
-                .alias(f"_tf{i}")
-                for i, key in enumerate(present)
-            ],
-        )
-        matched = per_doc.filter(
-            F.greatest(*[F.col(f"_tf{i}") for i in range(len(present))]) > 0
-            if len(present) > 1
-            else F.col("_tf0") > 0
-        )
-        matched = quantized_dl(spark, matched, "doc_len")
-        s1 = s1_of(F.col("qdl"))
-        score_terms = []
-        for i, key in enumerate(present):
-            score_terms.append(
-                F.when(
-                    F.col(f"_tf{i}") > 0,
-                    F.col(f"_tf{i}") * F.lit(s0s[key]) / (F.col(f"_tf{i}") + s1),
-                ).otherwise(F.lit(0.0))
-            )
-        total = score_terms[0]
-        for t in score_terms[1:]:
-            total = total + t
-        scored = matched.withColumn("score", total).filter(F.col("score") > 0.0)
-    else:
-        # wide-query form (same threshold as exact_topk): pinned s0 per
-        # key joins the exploded terms via a broadcast map; one
-        # hash-aggregate per doc sums the key-sorted contributions —
-        # same accumulation order as the pivot form and the sealed
-        # kernel, no per-term aggregate columns
-        s0_df = spark.createDataFrame(
-            [(key, s0) for key, s0 in sorted(s0s.items())], ["term_key", "s0"]
-        )
-        per_doc = m.groupBy("_rowid").agg(
-            *[F.first(c).alias(c) for c in pc],
-            F.first("doc_len").cast("bigint").alias("doc_len"),
-            F.collect_list(F.struct("term_key", "tf")).alias("pairs"),
-        )
-        matched = quantized_dl(spark, per_doc, "doc_len")
-        exploded = matched.select(
-            "_rowid", *pc, "qdl", F.explode("pairs").alias("p")
-        ).select(
-            "_rowid",
-            *pc,
-            "qdl",
-            F.col("p.term_key").alias("term_key"),
-            F.col("p.tf").cast("bigint").alias("tf"),
-        )
-        contrib = F.col("tf") * F.col("s0") / (F.col("tf") + s1_of(F.col("qdl")))
-        scored = (
-            exploded.join(F.broadcast(s0_df), "term_key")
-            .select("_rowid", *pc, "term_key", contrib.alias("c"))
-            .groupBy("_rowid")
-            .agg(
-                *[F.first(c).alias(c) for c in pc],
-                F.aggregate(
-                    F.array_sort(F.collect_list(F.struct("term_key", "c"))),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x["c"],
-                ).alias("score"),
-            )
-            .filter(F.col("score") > 0.0)
-        )
-    return (
-        scored.select(*pc, "score")
-        .orderBy(F.desc("score"), *pc)
-        .limit(k)
-    )
-
-
 def search_with_delta_df(
     spark: SparkSession,
     index_dir: str,
@@ -705,73 +571,21 @@ def search_with_delta_df(
     slack: int = 128,
     prefilter: DataFrame | None = None,
 ) -> DataFrame:
-    """O6 growing∪sealed top-k as one distributed plan: sealed segment
-    via :func:`bm25spark.distributed.search_distributed` (tombstones as
-    a per-shard blocklist), growing segment via :func:`_delta_topk_df`,
-    union → (rounded) re-rank → limit k. With ``round_score`` set, both
-    legs over-fetch by ``slack`` so the rounded boundary cannot drop a
-    tied survivor (same convention as ``Bm25Index.search_df``).
-
-    ``prefilter``: optional allowed *payload key* rows — P3 composed
-    with O6, the reference's filter-on-every-scan applied to BOTH
-    segments: the sealed leg routes it per shard alongside the
-    tombstone blocklist, the growing leg semi-joins the delta before
-    scoring (statistics stay whole-corpus/sealed either way, exactly
-    like the single-segment prefilter).
+    """O6 growing∪sealed top-k for one query: a batch of one through
+    :func:`search_with_delta_batch_df` (same options, same results).
 
     Returns (payload cols..., score) best-first, ties by payload cols
     ascending."""
-    from .distributed import search_distributed
-
-    idx = Bm25Index(spark, index_dir)
-    pc = idx.payload_cols
-
-    def _empty() -> DataFrame:
-        from pyspark.sql.types import DoubleType, StructField, StructType
-
-        src = idx.docs_df().select(
-            *[F.col(f"p_{c}").alias(c) for c in pc]
-        ).schema
-        return spark.createDataFrame(
-            [], StructType(list(src.fields) + [StructField("score", DoubleType())])
-        )
-
-    qkeys = analyze_query(query_text, get_analyzer(idx.meta["analyzer"]), idx.seed)
-    if not qkeys or not idx.term_stats(qkeys):
-        return _empty()
-
-    k_fetch = k + (slack if round_score is not None else 0)
-    sealed = search_distributed(
+    return search_with_delta_batch_df(
         spark,
         index_dir,
-        query_text,
-        k_fetch,
-        round_score=None,
-        blocked=_tombstones_df(spark, index_dir, gen=_gen_of(idx.meta)),
+        {"_": query_text},
+        k,
+        text_col,
+        round_score=round_score,
+        slack=slack,
         prefilter=prefilter,
-    ).select(*pc, "score")
-
-    merged = sealed
-    delta = _live_delta(spark, idx, index_dir)
-    if delta is not None and prefilter is not None:
-        delta = delta.join(
-            F.broadcast(prefilter.select(*pc).distinct()), pc, "left_semi"
-        )
-    if delta is not None:
-        dtop = _delta_topk_df(spark, idx, delta, query_text, k_fetch, text_col)
-        if dtop is not None:
-            merged = merged.unionByName(dtop.select(*pc, "score"))
-
-    score_col = (
-        F.round(F.col("score"), round_score)
-        if round_score is not None
-        else F.col("score")
-    )
-    return (
-        merged.select(*pc, score_col.alias("score"))
-        .orderBy(F.desc("score"), *pc)
-        .limit(k)
-    )
+    ).drop("query_id")
 
 
 def search_with_delta(
@@ -1129,91 +943,96 @@ def _vacuum_locked(
     return index_dir
 
 
-def _delta_topk_batch_df(
-    spark: SparkSession,
+def _delta_kernel_df(
     idx: Bm25Index,
     delta: DataFrame,
-    queries: dict[str, str],
+    qterms: dict[str, list[bytes]],
+    stats: dict[bytes, dict],
     k: int,
     text_col: str,
-    _analyzed: "tuple[dict, dict] | None" = None,
-) -> DataFrame | None:
-    """Q4 batched: exact-score the growing segment for M queries in ONE
-    Catalyst plan (tokenize once, per-query term weights join in via a
-    broadcast (query_id, term_key, s0) frame). Scores use the sealed
-    statistics exactly like :func:`_delta_topk_df`, and accumulate in
-    key-sorted order (the array_sort aggregate — the same order as the
-    sealed kernel and the single-query wide path), so batched results
-    are float-identical to the per-query plan. Returns
-    (query_id, payload cols..., score) with per-query top-k rows, or
-    ``None`` when no query has a sealed-dictionary term."""
-    import math
+) -> DataFrame:
+    """Q4: score the growing segment with the sealed segment's kernel.
 
-    if _analyzed is not None:
-        # caller (the batch entry point) already analyzed the queries
-        # and did ONE batched dictionary read — reuse both
-        qkeys, stats = _analyzed
-    else:
-        analyzer = get_analyzer(idx.meta["analyzer"])
-        all_keys: set[bytes] = set()
-        qkeys = {}
-        for qid, text in queries.items():
-            qkeys[qid] = analyze_query(text, analyzer, idx.seed)
-            all_keys.update(qkeys[qid])
-        stats = idx.term_stats(sorted(all_keys))
+    One ``mapInArrow`` task per partition of the live delta, each a
+    pseudo-shard: rows sorted by (payload cols, _rowid) take local ids
+    0..n-1 (so the kernel's id tiebreak is the final payload-ordered
+    cut's), fieldnorms are ``length_to_fieldnorm(doc_len)``, and each
+    query term becomes one decoded :class:`TermPostings` with a Cache
+    over the *sealed* statistics (N, avgdl, df). Terms absent from the
+    sealed dictionary are not in ``qterms`` and contribute nothing;
+    two live rows sharing a payload key score as two documents, as
+    they will after vacuum. No shuffle: work per task is bounded by
+    the partition split.
+
+    ``qterms``: {query_id: [sealed-present term keys, ascending]}.
+    Returns (query_id, payload cols..., score) — per task, each
+    query's top-k by raw score."""
     pc = idx.payload_cols
-    k1, b, avgdl, n = idx.k1, idx.b, idx.avgdl, idx.n_docs
-    rows = []
-    for qid, keys in qkeys.items():
-        for key in keys:
-            if key in stats:
-                s0 = math.log(
-                    (float(n) + 1.0) / (float(stats[key]["df"]) + 0.5)
-                ) * (k1 + 1.0)
-                rows.append((qid, bytearray(key), s0))
-    if not rows:
-        return None
-    q_terms = spark.createDataFrame(
-        rows, "query_id STRING, term_key BINARY, s0 DOUBLE"
+    prep = with_doc_terms(
+        delta, text_col, idx.meta["analyzer"], idx.seed
+    ).select(*pc, "_rowid", "doc_len", "terms")
+    out_schema = StructType(
+        [StructField("query_id", StringType())]
+        + [prep.schema[c] for c in pc]
+        + [StructField("score", DoubleType())]
     )
+    term_df = {key: int(stats[key]["df"]) for ks in qterms.values() for key in ks}
+    wanted = np.array(sorted(term_df), dtype="S16")
+    n_docs, k1, b, avgdl = idx.n_docs, idx.k1, idx.b, idx.avgdl
 
-    prep = with_doc_terms(delta, text_col, idx.meta["analyzer"], idx.seed)
-    m = prep.select(
-        "_rowid", *pc, "doc_len", F.explode("terms").alias("t")
-    ).select(
-        "_rowid",
-        *pc,
-        "doc_len",
-        F.col("t.key").alias("term_key"),
-        F.col("t.tf").cast("bigint").alias("tf"),
-    )
-    matched = quantized_dl(spark, m, "doc_len")
-    s1 = F.lit(k1) * (
-        F.lit(1.0 - b) + F.lit(b) * F.col("qdl") / F.lit(avgdl)
-    )
-    contrib = F.col("tf") * F.col("s0") / (F.col("tf") + s1)
-    from pyspark.sql import Window
+    def score(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pac
 
-    scored = (
-        matched.join(F.broadcast(q_terms), "term_key")
-        .select("query_id", "_rowid", *pc, "term_key", contrib.alias("c"))
-        .groupBy("query_id", "_rowid")
-        .agg(
-            *[F.first(c).alias(c) for c in pc],
-            F.aggregate(
-                F.array_sort(F.collect_list(F.struct("term_key", "c"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["c"],
-            ).alias("score"),
+        from .fieldnorm import length_to_fieldnorm
+        from .scoring import Cache
+        from .wand import TermPostings, taat_topk_batch
+
+        batches = list(batches)
+        if not batches:
+            return
+        t = pa.Table.from_batches(batches)
+        if t.num_rows == 0:
+            return
+        t = t.take(
+            pac.sort_indices(
+                t,
+                sort_keys=[(c, "ascending") for c in (*pc, "_rowid")],
+                null_placement="at_start",
+            )
         )
-        .filter(F.col("score") > 0.0)
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), *pc)
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select("query_id", *pc, "score")
-    )
+        fns = length_to_fieldnorm(t["doc_len"].to_numpy())
+        terms = t["terms"].combine_chunks()
+        parent = pac.list_parent_indices(terms).to_numpy().astype(np.int64)
+        fkeys, ftfs = terms.flatten().flatten()
+        if not len(fkeys):
+            return
+        fk = fkeys.cast(pa.binary(16))
+        keys = np.frombuffer(
+            fk.buffers()[1], dtype="S16", count=fk.offset + len(fk)
+        )[fk.offset:]
+        sel = np.isin(keys, wanted)
+        keys, ids = keys[sel], parent[sel]
+        tfs = ftfs.to_numpy(zero_copy_only=False).astype(np.int64)[sel]
+        tps = {}
+        for key in np.unique(keys):
+            m = keys == key
+            bkey = bytes(key).ljust(16, b"\0")  # S16 strips trailing NULs
+            tps[bkey] = TermPostings.from_decoded(
+                Cache(n_docs, term_df[bkey], k1, b, avgdl), ids[m], tfs[m], fns
+            )
+        rows = taat_topk_batch(tps, qterms, fns, k)
+        if not rows:
+            return
+        qids, locs, scores = zip(*rows)
+        hits = t.select(pc).take(pa.array(locs, type=pa.int64()))
+        yield from pa.Table.from_arrays(
+            [pa.array(qids, type=pa.string()), *hits.columns,
+             pa.array(scores, type=pa.float64())],
+            names=out_schema.fieldNames(),
+        ).to_batches()
+
+    return prep.mapInArrow(score, out_schema)
 
 
 def search_with_delta_batch_df(
@@ -1226,27 +1045,28 @@ def search_with_delta_batch_df(
     slack: int = 128,
     prefilter: DataFrame | None = None,
 ) -> DataFrame:
-    """Batched growing∪sealed top-k — the full serving matrix in two
-    Spark jobs regardless of batch size M: the sealed leg is
-    :func:`bm25spark.distributed.search_distributed_batch` (decode-once
-    per term per shard, tombstones as the per-shard blocklist), the
-    growing leg is ONE Catalyst plan over all M queries
-    (:func:`_delta_topk_batch_df`), then a per-query windowed re-rank.
-    Per-query results identical to :func:`search_with_delta_df`
-    (asserted in tests and the driver gate).
+    """O6 growing∪sealed top-k for M queries — the one delta-aware
+    serving path (:func:`search_with_delta_df` is a batch of one). The
+    sealed leg is :func:`bm25spark.distributed.search_distributed_batch`
+    (decode-once per term per shard, tombstones as the per-shard
+    blocklist); the growing leg runs the same ``taat_topk`` kernel over
+    each partition of the live delta (:func:`_delta_kernel_df`); then a
+    per-query windowed re-rank. With ``round_score`` set, both legs
+    over-fetch by ``slack`` so the rounded boundary cannot drop a tied
+    survivor (same convention as ``Bm25Index.search_df``).
 
-    ``prefilter``: optional allowed *payload key* rows (P3 composed
-    with O6, same semantics as :func:`search_with_delta_df`): the
-    sealed leg routes it per shard alongside the tombstone blocklist
-    (one shared allowlist mask per shard task, applied to every query
-    in the batch), and the growing leg semi-joins the delta before
-    scoring. Statistics stay sealed/whole-corpus either way.
+    ``prefilter``: optional allowed *payload key* rows — P3 composed
+    with O6, the reference's filter-on-every-scan applied to BOTH
+    segments: the sealed leg routes it per shard alongside the
+    tombstone blocklist (one shared allowlist mask per shard task), and
+    the growing leg semi-joins the delta before scoring. Statistics
+    stay sealed/whole-corpus either way.
 
     Returns (query_id, payload cols..., score), ordered by
     (query_id, score desc, payload cols)."""
     from pyspark.sql import Window
 
-    from .distributed import search_distributed_batch
+    from .distributed import _ordered_by_query, _sealed_topk_df
 
     idx = Bm25Index(spark, index_dir)
     gen = _gen_of(idx.meta)
@@ -1254,59 +1074,35 @@ def search_with_delta_batch_df(
 
     # ONE analyze pass + ONE batched dictionary read for the whole
     # batch; the live filter and the delta leg both derive from it
-    analyzer = get_analyzer(idx.meta["analyzer"])
-    qkeys = {
-        qid: analyze_query(text, analyzer, idx.seed)
-        for qid, text in queries.items()
-    }
+    qkeys = {qid: idx.query_keys(text) for qid, text in queries.items()}
     stats = idx.term_stats(sorted({k_ for ks in qkeys.values() for k_ in ks}))
-    live = {
-        qid: text
-        for qid, text in queries.items()
-        if any(k_ in stats for k_ in qkeys[qid])
+    qterms = {
+        qid: [k_ for k_ in keys if k_ in stats] for qid, keys in qkeys.items()
     }
-    if not live:
-        from pyspark.sql.types import (
-            DoubleType, StringType, StructField, StructType,
-        )
-
-        src = idx.docs_df().select(
-            *[F.col(f"p_{c}").alias(c) for c in pc]
-        ).schema
-        return spark.createDataFrame(
-            [],
-            StructType(
-                [StructField("query_id", StringType())]
-                + list(src.fields)
-                + [StructField("score", DoubleType())]
-            ),
-        )
+    qterms = {qid: keys for qid, keys in qterms.items() if keys}
+    if not qterms:
+        return idx.empty_df(with_query_id=True)
 
     k_fetch = k + (slack if round_score is not None else 0)
-    merged = search_distributed_batch(
-        spark,
-        index_dir,
-        live,
+    merged = _sealed_topk_df(
+        idx,
+        {qid: queries[qid] for qid in qterms},
         k_fetch,
         round_score=None,
-        blocked=_tombstones_df(spark, index_dir, gen=gen),
         prefilter=prefilter,
+        blocked=_tombstones_df(spark, index_dir, gen=gen),
+        prune_min_bytes=None,
     ).select("query_id", *pc, "score")
 
     delta = _live_delta(spark, idx, index_dir)
     if delta is not None and prefilter is not None:
-        # P3 on the growing leg: same broadcast semi-join as the
-        # single-query path (search_with_delta_df)
         delta = delta.join(
             F.broadcast(prefilter.select(*pc).distinct()), pc, "left_semi"
         )
     if delta is not None:
-        dtop = _delta_topk_batch_df(
-            spark, idx, delta, live, k_fetch, text_col,
-            _analyzed=({qid: qkeys[qid] for qid in live}, stats),
+        merged = merged.unionByName(
+            _delta_kernel_df(idx, delta, qterms, stats, k_fetch, text_col)
         )
-        if dtop is not None:
-            merged = merged.unionByName(dtop)
 
     score_col = (
         F.round(F.col("score"), round_score)
@@ -1314,10 +1110,10 @@ def search_with_delta_batch_df(
         else F.col("score")
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), *pc)
-    return (
+    return _ordered_by_query(
         merged.select("query_id", *pc, score_col.alias("score"))
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= k)
-        .drop("_rn")
-        .orderBy("query_id", F.desc("score"), *pc)
+        .drop("_rn"),
+        pc,
     )

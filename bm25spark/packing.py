@@ -149,6 +149,36 @@ def compress_tf_blocks(tfs2d: np.ndarray) -> list[tuple[int, bytes]]:
     return _batch_bitpack(tfs2d.astype(np.uint32, copy=False))
 
 
+def compress_tail_blocks(
+    values: np.ndarray, lengths: np.ndarray, ordered: bool
+) -> tuple[np.ndarray, list[bytes]]:
+    """Batch form of the tail-block (< 128 entries) bytepack path of
+    :func:`compress_document_ids` (``ordered=True``: deltas against the
+    previous id, the first against the block minimum = itself) and
+    :func:`compress_term_frequencies` (``ordered=False``: raw values).
+    ``values`` is the concatenation of the blocks, ``lengths`` their
+    sizes. Returns (metadata per block, payload per block), one
+    segmented vector pass instead of one call per block; byte-identical
+    to the per-block functions (tested)."""
+    v = np.asarray(values).astype(np.uint32, copy=False)
+    lengths = np.asarray(lengths, dtype=np.int64)
+    starts = np.concatenate(([0], np.cumsum(lengths)[:-1])).astype(np.int64)
+    if ordered:
+        d = np.empty_like(v)
+        d[1:] = v[1:] - v[:-1]
+        d[starts] = 0
+    else:
+        d = v
+    widths = np.maximum(
+        1, (_bit_lengths(np.bitwise_or.reduceat(d, starts)) + 7) // 8
+    )
+    le = d.astype("<u4").view(np.uint8).reshape(-1, 4)
+    payloads = [
+        le[s : s + n, :w].tobytes() for s, n, w in zip(starts, lengths, widths)
+    ]
+    return _BIT_FLAG | widths, payloads
+
+
 def decompress_blocks_batch(
     metas,
     datas: list[bytes],

@@ -303,9 +303,9 @@ def exact_topk(
         from .analyze import intern_str
 
         # sorted by interned key bytes — the SAME accumulation order as
-        # exact_topk_wide's array_sort and _delta_topk_df's sorted
-        # qkeys, so scores agree bit-for-bit across the 64-term
-        # threshold and the delta path
+        # exact_topk_wide's array_sort and the taat kernel's sorted
+        # query keys, so scores agree bit-for-bit across the 64-term
+        # threshold
         qtokens = sorted(intern_str(cfg.seed, t) for t in qtokens)  # type: ignore[assignment]
         m = tokenize_udf_mappings(docs, text_col, id_col, cfg)
         per_doc = m.groupBy("doc_id").agg(

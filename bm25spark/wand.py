@@ -63,6 +63,36 @@ class TermPostings:
     #: as read-only
     decoded: tuple | None = None
 
+    @classmethod
+    def from_decoded(
+        cls, cache: Cache, ids: np.ndarray, tfs: np.ndarray, fieldnorms
+    ) -> "TermPostings":
+        """One already-decoded, non-empty posting list (ascending
+        unique ``ids``) as a single pseudo-block whose bounds are its true maximum —
+        the growing segment's postings, scored by the same kernel as
+        the sealed blocks."""
+        ids = np.asarray(ids, dtype=np.int64)
+        tfs = np.asarray(tfs, dtype=np.int64)
+        fns = np.asarray(fieldnorms[ids], dtype=np.int64)
+        am = int(np.argmax(cache.evaluate(fns, tfs)))
+        one = lambda v: np.array([v], dtype=np.int64)  # noqa: E731
+        return cls(
+            cache=cache,
+            wand_fn=int(fns[am]),
+            wand_tf=int(tfs[am]),
+            min_doc=one(ids[0]),
+            max_doc=one(ids[-1]),
+            count=one(len(ids)),
+            block_fn=one(fns[am]),
+            block_tf=one(tfs[am]),
+            ids_meta=[0],
+            ids_bytes=[b""],
+            tfs_meta=[0],
+            tfs_bytes=[b""],
+            shard_base=one(0),
+            decoded=(ids, tfs),
+        )
+
     @property
     def n_blocks(self) -> int:
         return len(self.min_doc)
@@ -433,6 +463,31 @@ def taat_topk(
     return [(int(candidates[i]), float(scores[i])) for i in order]
 
 
+def taat_topk_batch(
+    term_map: dict,
+    qterms: dict,
+    fieldnorms,
+    k: int,
+    allowed_mask=None,
+) -> list[tuple]:
+    """:func:`taat_topk` once per query over one shared term map —
+    the per-task kernel loop of every serving task (sealed shard or
+    growing segment). ``term_map``: {term_key: TermPostings};
+    ``qterms``: {query_id: [term_key, ...]} in summation order.
+    Returns [(query_id, doc_id, score)]."""
+    out = []
+    for qid, keys in qterms.items():
+        terms = [term_map[key] for key in keys if key in term_map]
+        if terms:
+            out.extend(
+                (qid, doc, score)
+                for doc, score in taat_topk(
+                    terms, fieldnorms, k, allowed_mask=allowed_mask
+                )
+            )
+    return out
+
+
 def _block_ubs(tp: TermPostings) -> np.ndarray:
     """Per-block upper bounds as one vectorized Cache evaluation."""
     if not tp.n_blocks:
@@ -552,8 +607,7 @@ def _prune_keeps(
     allowed_mask,
 ) -> list[np.ndarray]:
     """Kept-block indices per term for ONE query — the iterative
-    θ-refinement core shared by :func:`prune_blocks` and
-    :func:`prune_blocks_batch`.
+    θ-refinement core of :func:`prune_blocks_batch`.
 
     Terms are processed in descending token-upper-bound order; EVERY
     term runs the chunked θ-seeded decode loop (blocks in descending
@@ -727,38 +781,20 @@ def prune_blocks(
     k: int,
     allowed_mask=None,
 ) -> tuple[list[TermPostings], dict]:
-    """Exact block-level decode pruning: drop whole posting blocks that
-    provably cannot place a document in the top-k, BEFORE
-    decompressing them (see :func:`_prune_keeps` for the scheme and
-    the exactness argument). ``taat_topk`` over the pruned terms is
-    bit-identical to the unpruned run (tests + hypothesis fuzz pin
-    this); what's saved is decode work and — at scale, where blocks
-    are read lazily — I/O bytes.
+    """Exact block-level decode pruning for one query: drop whole
+    posting blocks that provably cannot place a document in the top-k,
+    BEFORE decompressing them — a one-query call of
+    :func:`prune_blocks_batch`. Term order is kept (``taat_topk`` sums
+    in input order), so ``taat_topk`` over the pruned terms is
+    bit-identical to the unpruned run.
 
     Returns (pruned_terms, stats) with stats = {blocks_total,
     blocks_kept, bytes_total, bytes_kept}."""
-    terms = [t for t in terms if t.n_blocks]
-    stats = {
-        "blocks_total": sum(t.n_blocks for t in terms),
-        "bytes_total": sum(_bytes_of(t) for t in terms),
-        "blocks_kept": 0,
-        "bytes_kept": 0,
-    }
-    if not terms or k <= 0:
-        stats["blocks_kept"] = stats["blocks_total"]
-        stats["bytes_kept"] = stats["bytes_total"]
-        return terms, stats
-    ubs = [_block_ubs(t) for t in terms]
-    caches = [_BlockDecodeCache(t) for t in terms]
-    keeps = _prune_keeps(terms, ubs, caches, fieldnorms, k, allowed_mask)
-    out = []
-    for tp, keep, cache in zip(terms, keeps, caches):
-        stats["blocks_kept"] += len(keep)
-        stats["bytes_kept"] += _bytes_of(tp, keep.tolist())
-        pruned = _apply_keep(tp, keep, cache)
-        if pruned.n_blocks:
-            out.append(pruned)
-    return out, stats
+    term_map = dict(enumerate(terms))
+    pruned, stats = prune_blocks_batch(
+        term_map, {"_": list(term_map)}, fieldnorms, k, allowed_mask
+    )
+    return [pruned[i] for i in term_map if i in pruned], stats
 
 
 def prune_blocks_batch(

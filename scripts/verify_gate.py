@@ -44,7 +44,10 @@ def main() -> int:
     import __spark_entry__ as E
     from bm25spark.session import get_spark
 
-    spark = get_spark("verify-gate", cores=8, shuffle_partitions=8)
+    # SPARK_GRAFT_CPUS if set, else every CPU of this machine — never
+    # more Spark task threads than cores
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+    spark = get_spark("verify-gate", cores=cores, shuffle_partitions=cores)
     spark.sparkContext.setLogLevel("ERROR")
     # trained-parameter oracles (IVF centroids) must train on the
     # same sf dir the Spark entries run at

@@ -288,6 +288,24 @@ class TestPacking:
         for g, w, n in zip(got_tfs, want_tfs, counts):
             assert (g[:n] == w).all()
 
+    def test_tail_blocks_equal_per_block(self):
+        """compress_tail_blocks (the build's segmented tail-block pass)
+        is byte-identical, block by block, to compress_document_ids /
+        compress_term_frequencies for every tail length 1..127."""
+        rng = np.random.default_rng(7)
+        lens = np.arange(1, 128)
+        ids, tfs = [], []
+        for n in lens:
+            bits = int(rng.integers(0, 25))
+            gaps = rng.integers(0, 2**bits + 1, size=n, dtype=np.uint64)
+            ids.append((np.cumsum(gaps) + int(rng.integers(0, 2**20))).astype(np.uint32))
+            tfs.append(rng.integers(1, 2 ** int(rng.integers(1, 31)), size=n).astype(np.uint32))
+        id_meta, id_data = P.compress_tail_blocks(np.concatenate(ids), lens, ordered=True)
+        tf_meta, tf_data = P.compress_tail_blocks(np.concatenate(tfs), lens, ordered=False)
+        for i, n in enumerate(lens):
+            assert (int(id_meta[i]), id_data[i]) == P.compress_document_ids(int(ids[i][0]), ids[i]), n
+            assert (int(tf_meta[i]), tf_data[i]) == P.compress_term_frequencies(tfs[i]), n
+
     def test_size_parity_with_reference_formula(self):
         # full block, bitwidth w -> 128*w/8 bytes; metadata (0<<7)|w
         ids = np.arange(128, dtype=np.uint32) * 5 + 7

@@ -220,3 +220,37 @@ class TestPruneGate:
             spark, d, qs, 20, blocked=blocked, prune_min_bytes=0
         ).collect()
         assert [tuple(r) for r in got] == [tuple(r) for r in want]
+
+
+def test_absent_term_results_keep_payload_schema(spark, tmp_path):
+    """A query with no term in the dictionary returns an empty frame
+    with the payload columns + score on every serving path — checked
+    on a payload that is not named doc_id, so a hard-coded
+    (doc_id, score) schema cannot pass by accident."""
+    from bm25spark.maintain import insert, search_with_delta_df
+
+    rows = [
+        (f"r{i % 3}", f"src/f{i}.py", f"def f{i}(): return alpha_{i % 5}")
+        for i in range(40)
+    ]
+    df = spark.createDataFrame(rows, "repo STRING, path STRING, text STRING")
+    d = str(tmp_path / "idx_payload")
+    build_index(spark, df, d, "text", ["repo", "path"])
+    insert(
+        spark, d,
+        spark.createDataFrame([("r9", "new.py", "alpha_1 beta")], df.schema),
+        "text",
+    )
+    want = ["repo", "path", "score"]
+    idx = Bm25Index(spark, d)
+    frames = {
+        "search_distributed": search_distributed(spark, d, "zz_absent_term", 5),
+        "search_df": idx.search_df("zz_absent_term", 5),
+        "search_df_routed": idx.search_df("zz_absent_term", 5, max_driver_docs=1),
+        "search_with_delta_df": search_with_delta_df(
+            spark, d, "zz_absent_term", 5, "text"
+        ),
+    }
+    for name, out in frames.items():
+        assert out.columns == want, (name, out.columns)
+        assert out.collect() == [], name

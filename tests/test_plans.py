@@ -79,11 +79,10 @@ def test_payload_join_broadcasts_topk_side(spark, tmp_path):
 
 
 def test_delta_batch_plan_broadcasts_and_single_python_crossing(spark, tmp_path):
-    """Batched delta leg: per-query term weights join in via BROADCAST
-    (never a shuffle of the delta on term_key), and the only Python
-    operator in the whole batched growing∪sealed plan family is the
-    fused Arrow tokenizer plus the per-shard kernel — no row-at-a-time
-    Python anywhere."""
+    """Batched delta leg: the payload join broadcasts, and the only
+    Python operators in the whole batched growing∪sealed plan family
+    are the fused Arrow tokenizer plus the kernel tasks (per shard and
+    per delta partition) — no row-at-a-time Python anywhere."""
     from bm25spark.api import index_for_parquet
     from bm25spark.maintain import insert, search_with_delta_batch_df
 
@@ -101,9 +100,9 @@ def test_delta_batch_plan_broadcasts_and_single_python_crossing(spark, tmp_path)
         )
     )
     assert "BatchEvalPython" not in plan  # no row-at-a-time Python
-    assert "BroadcastHashJoin" in plan    # q_terms + payload joins
+    assert "BroadcastHashJoin" in plan    # payload join
     # exactly one Arrow tokenizer crossing in the delta leg, plus the
-    # per-shard kernels (FlatMapGroupsInPandas / cogroup)
+    # kernel tasks (FlatMapGroupsInPandas / cogroup / MapInArrow)
     assert plan.count("ArrowEvalPython") <= 1, plan.count("ArrowEvalPython")
 
 
