@@ -14,11 +14,13 @@ Pipeline (thread/node boundaries in the reference = shuffles here):
                 -> docs artifact (id, fieldnorm, doc_len, payload,
                 content sha256) + mappings staging table.
 2. ``stats``    N, Σdl  (flush.rs:49-66) -> part of meta.
-3. ``postings`` mappings -> shard = id // shard_size -> shuffle on
-                (term_key, shard) -> per-group block construction
-                (128-posting chunks, delta bitpack, block-max WAND
-                metadata; flush.rs:78-125) -> postings artifact,
-                directory-partitioned by crc32(term_key) bucket.
+3. ``postings`` doc-grouped rows (one per document: term keys, tfs,
+                shard = id // shard_size, local id, fieldnorm) ->
+                shuffle on shard -> per-(term, shard) block
+                construction (128-posting chunks, delta bitpack,
+                block-max WAND metadata; flush.rs:78-125) -> postings
+                artifact, directory-partitioned by crc32(term_key)
+                bucket.
 4. ``terms``    per-term df + WAND argmax merged across shards with
                 the Wand::extend monoid (bm25.rs:319-325) -> terms
                 artifact (the broadcast dictionary).
@@ -46,10 +48,7 @@ local[N]):
 from __future__ import annotations
 
 import json
-import os
-
 import zlib
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -127,6 +126,7 @@ def _assign_doc_ids(
     df: DataFrame,
     order_cols: list[str],
     partitions: int,
+    pins: list[int],
     pin_output: bool = False,
 ) -> DataFrame:
     """Dense deterministic ids 0..N-1 in the global sort order of
@@ -150,12 +150,18 @@ def _assign_doc_ids(
     row's rank within its (checkpoint-pinned, sorted) partition, so
     _iid = offsets[partitionId] + rank recovers exactly the global
     rank the Python pass produced. The offset table is a literal
-    array indexed by partition id (O(1) per row)."""
+    array indexed by partition id (O(1) per row).
+
+    The id of every checkpoint RDD is appended to ``pins`` as soon as
+    it exists; the caller drops them with :func:`_release_rdds` once
+    the frame's consumers have run (they live for the session
+    otherwise)."""
     parts = (
         df.repartitionByRange(partitions, *order_cols)
         .sortWithinPartitions(*order_cols)
         .localCheckpoint(eager=True)
     )
+    pins.append(_checkpoint_rdd_id(parts))
     counts = (
         parts.withColumn("_pid", F.spark_partition_id())
         .groupBy("_pid")
@@ -188,11 +194,28 @@ def _assign_doc_ids(
     )
     if pin_output:
         # second pin: keeps partition ids valid when a later plan (the
-        # vacuum union) would merge this mapInPandas into a wider
+        # vacuum union) would merge this projection into a wider
         # stage. The plain build skips it — its next step writes the
         # frame to parquet directly, so no such merge can happen.
         out = out.localCheckpoint(eager=True)
+        pins.append(_checkpoint_rdd_id(out))
     return out
+
+
+def _checkpoint_rdd_id(df: DataFrame) -> int:
+    """Id of the persisted RDD behind a ``localCheckpoint``ed frame
+    (its analyzed plan is the LogicalRDD over that RDD)."""
+    return int(df._jdf.queryExecution().analyzed().rdd().id())
+
+
+def _release_rdds(spark: SparkSession, rdd_ids: list[int]) -> None:
+    """Unpersist exactly these RDDs — never a diff of the session's
+    persisted set, which would drop a concurrent caller's pins."""
+    persisted = spark.sparkContext._jsc.getPersistentRDDs()
+    for rid in rdd_ids:
+        rdd = persisted.get(rid)
+        if rdd is not None:
+            rdd.unpersist()
 
 
 def _blocks_from_arrays(
@@ -207,7 +230,7 @@ def _blocks_from_arrays(
     shard_size: int,
     n_buckets: int,
 ) -> list:
-    """Shared block-construction kernel over parallel posting arrays
+    """Block construction over parallel posting arrays
     (any order): lexsort by (term_key, shard, local_id), find group
     boundaries vectorized, emit 128-posting blocks per (term, shard)
     group — compression + block-max WAND exactly as the reference's
@@ -349,66 +372,21 @@ def _blocks_from_arrays(
     return cols
 
 
-def _build_blocks_fn(cfg: Bm25Config, avgdl: float, n_buckets: int):
-    """mapInPandas over exploded mapping rows hash-clustered by
-    (term_key, shard) — the staging-parquet path used by vacuum and
-    stage-granular resume."""
-    k1, b = cfg.k1, cfg.b
-    shard_size = cfg.shard_size
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        cols = _blocks_from_arrays(
-            np.array(pdf["term_key"].to_list(), dtype="S16"),
-            pdf["shard"].to_numpy(np.int64),
-            pdf["local_id"].to_numpy(np.int64),
-            pdf["tf"].to_numpy(np.int64),
-            pdf["fieldnorm"].to_numpy(np.int64),
-            k1, b, avgdl, shard_size, n_buckets,
-        )
-        yield pd.DataFrame(cols)
-
-    return build
-
-
-def _arrow_postings_schema():
-    import pyarrow as pa
-
-    return pa.schema(
-        [
-            ("term_key", pa.binary()),
-            ("bucket", pa.int32()),
-            ("shard", pa.int32()),
-            ("block_ord", pa.int32()),
-            ("min_doc", pa.int64()),
-            ("max_doc", pa.int64()),
-            ("count", pa.int32()),
-            ("wand_fn", pa.int32()),
-            ("wand_tf", pa.int32()),
-            ("block_ub", pa.float64()),
-            ("ids_meta", pa.int32()),
-            ("ids_bytes", pa.binary()),
-            ("tfs_meta", pa.int32()),
-            ("tfs_bytes", pa.binary()),
-        ]
-    )
-
-
 def _build_blocks_docs_fn(cfg: Bm25Config, avgdl: float, n_buckets: int):
-    """mapInArrow over *doc-grouped* rows hash-clustered by shard —
-    the build's hot path. Shuffling one compact row per document
-    (term-key/tf arrays + per-doc shard/local_id/fieldnorm) instead of
-    one row per posting cuts the shuffle volume of the build's only
-    wide stage by ~40% (no per-posting repetition of local_id,
-    fieldnorm, shard) and skips the staging-parquet read-back. The
-    flatten back to posting arrays is zero-copy Arrow: list offsets →
-    np.repeat for the per-doc columns, fixed-size-binary cast for the
-    16-byte keys."""
+    """The block kernel: mapInArrow over *doc-grouped* rows
+    hash-clustered by shard (build, resume and vacuum alike).
+    Shuffling one compact row per document (term-key/tf arrays +
+    per-doc shard/local_id/fieldnorm) instead of one row per posting
+    cuts the shuffle volume of the build's only wide stage by ~40% (no
+    per-posting repetition of local_id, fieldnorm, shard). The flatten
+    back to posting arrays is zero-copy Arrow: list offsets → np.repeat
+    for the per-doc columns, fixed-size-binary cast for the 16-byte
+    keys."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     k1, b = cfg.k1, cfg.b
     shard_size = cfg.shard_size
+    schema = to_arrow_schema(POSTINGS_SCHEMA)
 
     def build(batches):
         import pyarrow as pa
@@ -444,12 +422,64 @@ def _build_blocks_docs_fn(cfg: Bm25Config, avgdl: float, n_buckets: int):
             np.repeat(fn_d, lens),
             k1, b, avgdl, shard_size, n_buckets,
         )
-        out = pd.DataFrame(cols)
         yield pa.RecordBatch.from_pandas(
-            out, schema=_arrow_postings_schema(), preserve_index=False
+            pd.DataFrame(cols), schema=schema, preserve_index=False
         )
 
     return build
+
+
+def _read_doc_terms(spark: SparkSession, path: str) -> DataFrame:
+    """The mappings staging as doc-grouped rows ``(tkeys, ttfs, shard,
+    local_id, fieldnorm)`` — one per document, the block kernel's only
+    input layout. Staging written before r7 holds one row per posting
+    ``(term_key, shard, local_id, tf, fieldnorm)``; it is regrouped
+    here at read time. One struct list keeps each document's keys and
+    tfs aligned; their order within a document is free (the kernel
+    sorts its postings itself)."""
+    maps = spark.read.parquet(path)
+    if "tkeys" in maps.columns:
+        return maps
+    return (
+        maps.groupBy("shard", "local_id", "fieldnorm")
+        .agg(F.collect_list(F.struct("term_key", "tf")).alias("z"))
+        .select(
+            F.col("z.term_key").alias("tkeys"),
+            F.col("z.tf").alias("ttfs"),
+            F.col("shard").cast("int").alias("shard"),
+            F.col("local_id").cast("int").alias("local_id"),
+            F.col("fieldnorm").cast("int").alias("fieldnorm"),
+        )
+    )
+
+
+def _write_postings(
+    spark: SparkSession,
+    doc_terms: DataFrame,
+    postings_path: str,
+    cfg: Bm25Config,
+    avgdl: float,
+) -> None:
+    """Stage 3: shuffle the doc-grouped rows on shard (a shard holds
+    complete (term, shard) groups), build blocks per task, then cluster
+    the blocks by term bucket for the directory-partitioned write."""
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    blocks = doc_terms.repartition(n_part, "shard").mapInArrow(
+        _build_blocks_docs_fn(cfg, avgdl, cfg.term_buckets),
+        POSTINGS_SCHEMA,
+    )
+    (
+        blocks.repartition("bucket")
+        .sortWithinPartitions("term_key", "shard", "block_ord")
+        .write.mode("overwrite")
+        .partitionBy("bucket")
+        .parquet(postings_path)
+    )
+    _ensure_readable_parquet(
+        postings_path,
+        StructType([f for f in POSTINGS_SCHEMA.fields if f.name != "bucket"]),
+        subdir="bucket=0",
+    )
 
 
 def build_index(
@@ -473,31 +503,6 @@ def build_index(
     cfg = cfg or Bm25Config()
     payload_cols = payload_cols or list(order_cols)
 
-    # r7: every build pins its range-shuffled source with an eager
-    # localCheckpoint whose blocks were never dropped — repeated builds
-    # in one session (the bench, rebuild loops) accumulated gigabytes
-    # of dead checkpoint blocks in the storage pool, evicting the live
-    # tokenized cache mid-build. Snapshot the persisted-RDD ids here
-    # and drop everything new before returning (the tracked persist is
-    # unpersisted explicitly; the only other new id is the checkpoint).
-    def _persisted_ids() -> set:
-        try:
-            jmap = spark.sparkContext._jsc.getPersistentRDDs()
-            return {int(k) for k in jmap.keySet().toArray()}
-        except Exception:
-            return set()
-
-    def _drop_new_persists(before: set) -> None:
-        try:
-            jmap = spark.sparkContext._jsc.getPersistentRDDs()
-            for k in jmap.keySet().toArray():
-                if int(k) not in before:
-                    jmap.get(k).unpersist()
-        except Exception:
-            pass
-
-    _rdds_before = _persisted_ids()
-
     docs_path = fsio.join(index_dir, "docs")
     maps_path = fsio.join(index_dir, "mappings")
 
@@ -505,8 +510,16 @@ def build_index(
         fsio.rmtree(index_dir)
     fsio.mkdirs(index_dir)
 
+    if resume and _stage_done(docs_path) and _stage_done(maps_path):
+        return finalize_index(spark, index_dir, cfg, payload_cols, resume=True)
+
     # ---- stage 1: docs + mappings staging -------------------------------
-    if not (resume and _stage_done(docs_path) and _stage_done(maps_path)):
+    # the id-assignment checkpoints and the tokenized cache are dropped
+    # on every exit: left behind, repeated builds in one session
+    # accumulate dead blocks in the storage pool and evict live caches
+    pins: list[int] = []
+    with_ids = None
+    try:
         src = docs.filter(F.col(text_col).isNotNull())
         keep = list(dict.fromkeys([*order_cols, *payload_cols, text_col]))
         src = src.select(*keep)
@@ -520,7 +533,7 @@ def build_index(
         # ids are a function of order_cols only — assign them *before*
         # tokenizing so the counts pass doesn't run the analyzer UDF
         # (tokenization then happens exactly once, under the persist)
-        assigned = _assign_doc_ids(spark, src, order_cols, n_rows_hint)
+        assigned = _assign_doc_ids(spark, src, order_cols, n_rows_hint, pins)
         with_ids = with_doc_terms(assigned, text_col, cfg.analyzer, cfg.seed)
         with_ids = (
             with_ids.withColumn(
@@ -533,7 +546,7 @@ def build_index(
                 (F.col("_iid") % cfg.shard_size).cast("int"),
             )
             .withColumn("content_sha256", F.sha2(F.col(text_col), 256))
-            # quantize once per document, before the mappings explode
+            # quantize once per document, into the staging row
             .withColumn("fieldnorm", _fieldnorm_expr())
             # the raw text is fully consumed (terms + sha) — keep it
             # out of the cache, it is by far the widest column
@@ -575,8 +588,8 @@ def build_index(
             )
             _ensure_readable_parquet(docs_path, docs_art.schema)
 
-        # stage 3 consumes the cached frame doc-grouped (one compact
-        # row per document through the shard shuffle)
+        # the staging layout: one compact row per document, shuffled by
+        # stage 3 straight from the cache
         doc_terms = with_ids.select(
             F.col("terms").getField("key").alias("tkeys"),
             F.col("terms").getField("tf").alias("ttfs"),
@@ -585,40 +598,13 @@ def build_index(
             F.col("fieldnorm").cast("int").alias("fieldnorm"),
         )
 
-        # the mappings staging parquet exists for resume and vacuum
-        # (they re-enter through finalize_index's mappings path); it
-        # reads the already-materialized cache, so it can run
-        # concurrently with stage 3 instead of serializing parquet IO
-        # in front of it. r7: written DOC-GROUPED (the same doc_terms
-        # shape stage 3 shuffles) instead of exploded per posting —
-        # ~40x fewer rows, no per-posting repetition of
-        # shard/local_id/fieldnorm; readers accept both layouts
+        # the mappings staging parquet exists for resume (re-entering
+        # through finalize_index) and vacuum (relabeling it); it reads the
+        # already-materialized cache, so it can run concurrently with
+        # stage 3 instead of serializing parquet IO in front of it
         def _write_mappings():
             doc_terms.write.mode("overwrite").parquet(maps_path)
             _ensure_readable_parquet(maps_path, doc_terms.schema)
-
-        postings_path = fsio.join(index_dir, "postings")
-
-        def _write_postings():
-            n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-            blocks = doc_terms.repartition(n_part, "shard").mapInArrow(
-                _build_blocks_docs_fn(cfg, avgdl, cfg.term_buckets),
-                POSTINGS_SCHEMA,
-            )
-            (
-                blocks.repartition("bucket")
-                .sortWithinPartitions("term_key", "shard", "block_ord")
-                .write.mode("overwrite")
-                .partitionBy("bucket")
-                .parquet(postings_path)
-            )
-            _ensure_readable_parquet(
-                postings_path,
-                StructType(
-                    [f for f in POSTINGS_SCHEMA.fields if f.name != "bucket"]
-                ),
-                subdir="bucket=0",
-            )
 
         from concurrent.futures import ThreadPoolExecutor
 
@@ -628,22 +614,23 @@ def build_index(
         # postings (resume=True: its _SUCCESS markers skip stage 3)
         with ThreadPoolExecutor(max_workers=3) as pool:
             futures = [
-                pool.submit(f)
-                for f in (_write_docs, _write_mappings, _write_postings)
+                pool.submit(_write_docs),
+                pool.submit(_write_mappings),
+                pool.submit(
+                    _write_postings, spark, doc_terms,
+                    fsio.join(index_dir, "postings"), cfg, avgdl,
+                ),
             ]
             for fu in futures:
                 fu.result()
-        out = finalize_index(
+        return finalize_index(
             spark, index_dir, cfg, payload_cols, resume=True,
             stats=(n_docs, sum_dl),
         )
-        with_ids.unpersist()
-        _drop_new_persists(_rdds_before)
-        return out
-
-    out = finalize_index(spark, index_dir, cfg, payload_cols, resume=resume)
-    _drop_new_persists(_rdds_before)
-    return out
+    finally:
+        if with_ids is not None:
+            with_ids.unpersist()
+        _release_rdds(spark, pins)
 
 
 def finalize_index(
@@ -652,21 +639,18 @@ def finalize_index(
     cfg: Bm25Config,
     payload_cols: list[str],
     resume: bool = False,
-    mappings_df: DataFrame | None = None,
-    doc_terms_df: DataFrame | None = None,
     stats: tuple[int, int] | None = None,
 ) -> str:
-    """Stages 2-5 over already-written docs/mappings artifacts.
+    """Stages 2-5 over already-written docs and mappings staging.
 
-    Shared by the initial build and by vacuum compaction (which writes
-    relabeled docs/mappings artifacts itself — the reference's maintain
-    re-runs exactly the sort+flush stages on the merged stream,
-    maintain.rs:27-311).
-
-    ``doc_terms_df``: doc-grouped posting source (tkeys, ttfs, shard,
-    local_id, fieldnorm — one row per document) used by the initial
-    build's hot path; when absent, stage 3 reads the exploded mappings
-    staging (resume / vacuum)."""
+    Shared by the initial build (``resume=True`` after it wrote the
+    postings itself, with ``stats`` observed on the way), stage-granular
+    resume, and vacuum compaction, which writes relabeled docs and
+    doc-grouped staging itself — the reference's maintain re-runs
+    exactly the sort+flush stages on the merged stream
+    (maintain.rs:27-311). Stage 3 reads the staging through
+    :func:`_read_doc_terms`, so indexes staged in the older per-posting
+    layout rebuild through the same kernel."""
     docs_path = fsio.join(index_dir, "docs")
     maps_path = fsio.join(index_dir, "mappings")
     postings_path = fsio.join(index_dir, "postings")
@@ -691,52 +675,8 @@ def finalize_index(
 
     # ---- stage 3: postings ----------------------------------------------
     if not (resume and _stage_done(postings_path)):
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        if doc_terms_df is not None:
-            # hot path: shuffle one compact row per doc, cluster whole
-            # shards per task (a shard contains complete (term, shard)
-            # groups, so block output is identical to the mappings path)
-            blocks = doc_terms_df.repartition(n_part, "shard").mapInArrow(
-                _build_blocks_docs_fn(cfg, avgdl, cfg.term_buckets),
-                POSTINGS_SCHEMA,
-            )
-        else:
-            mappings = (
-                mappings_df
-                if mappings_df is not None
-                else spark.read.parquet(maps_path)
-            )
-            if "tkeys" in mappings.columns:
-                # doc-grouped staging (the r7 layout the initial build
-                # writes) — identical shape to the hot path's source,
-                # so it flows through the same shard-clustered kernel
-                blocks = mappings.repartition(n_part, "shard").mapInArrow(
-                    _build_blocks_docs_fn(cfg, avgdl, cfg.term_buckets),
-                    POSTINGS_SCHEMA,
-                )
-            else:
-                # exploded per-posting staging (pre-r7 indexes and
-                # vacuum's relabel output): hash-cluster by
-                # (term_key, shard); the kernel lexsorts its partition
-                # itself (NumPy sort beats a Spark sort it would redo
-                # anyway)
-                blocks = mappings.repartition(
-                    n_part, "term_key", "shard"
-                ).mapInPandas(
-                    _build_blocks_fn(cfg, avgdl, cfg.term_buckets),
-                    POSTINGS_SCHEMA,
-                )
-        (
-            blocks.repartition("bucket")
-            .sortWithinPartitions("term_key", "shard", "block_ord")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(postings_path)
-        )
-        _ensure_readable_parquet(
-            postings_path,
-            StructType([f for f in POSTINGS_SCHEMA.fields if f.name != "bucket"]),
-            subdir="bucket=0",
+        _write_postings(
+            spark, _read_doc_terms(spark, maps_path), postings_path, cfg, avgdl
         )
 
     # ---- stages 4 + lineage: three independent jobs over the written
@@ -829,13 +769,7 @@ def finalize_index(
     if not (resume and _stage_done(lineage_path)):
         tasks.append(_write_lineage)
         tasks.append(_write_bucket_lineage)
-    # BM25SPARK_FINALIZE_PARALLEL=0 forces sequential execution (A/B
-    # lever: overlapping helps when cores outnumber a single job's
-    # tasks, hurts when the pinned core budget is already saturated)
-    if os.environ.get("BM25SPARK_FINALIZE_PARALLEL", "1") == "0":
-        for t in tasks:
-            t()
-    elif tasks:
+    if tasks:
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=len(tasks)) as pool:

@@ -53,6 +53,8 @@ from .build import (
     _assign_doc_ids,
     _ensure_readable_parquet,
     _fieldnorm_expr,
+    _read_doc_terms,
+    _release_rdds,
     finalize_index,
 )
 from .config import Bm25Config
@@ -792,103 +794,90 @@ def _vacuum_locked(
         )
     sealed = sealed.withColumnRenamed("doc_id", "old_id")
     parts = max(spark.sparkContext.defaultParallelism, 8)
-    relabeled = _assign_doc_ids(spark, sealed, ["old_id"], parts, pin_output=True)
-    relabeled.persist()
-    n_sealed = relabeled.count()
-
-    # --- delta docs: tokenize, ids after the sealed block ---
-    delta = _live_delta(spark, idx, index_dir)
-    if delta is not None and delta.count() > 0:
-        prep = with_doc_terms(delta, text_col, cfg.analyzer, cfg.seed)
-        # _rowid makes the order key unique even when payload keys
-        # repeat, so every delta row gets its own deterministic doc_id
-        dass = _assign_doc_ids(
-            spark, prep, [*pc, "_rowid"], parts, pin_output=True
-        ).withColumn(
-            "_iid", F.col("_iid") + F.lit(n_sealed)
+    # the id-assignment checkpoints and the relabel cache are dropped on
+    # every exit, once the docs and staging writes no longer need them
+    pins: list[int] = []
+    relabeled = None
+    try:
+        relabeled = _assign_doc_ids(
+            spark, sealed, ["old_id"], parts, pins, pin_output=True
         )
-        dass = dass.withColumn("content_sha256", F.sha2(F.col(text_col), 256))
-        fn_expr = _fieldnorm_expr()
-        delta_docs = dass.select(
+        relabeled.persist()
+        n_sealed = relabeled.count()
+
+        # sealed survivors: their staged rows (fieldnorm included),
+        # relabeled per document; the inner join drops tombstoned docs
+        relabel_map = relabeled.select(
+            F.col("old_id").alias("gid"), F.col("_iid").alias("new_gid")
+        )
+        new_maps = (
+            _read_doc_terms(spark, idx._path("mappings"))
+            .withColumn(
+                "gid",
+                F.col("shard").cast("long") * cfg.shard_size + F.col("local_id"),
+            )
+            .join(relabel_map, "gid")
+            .select("tkeys", "ttfs", F.col("new_gid").alias("gid"), "fieldnorm")
+        )
+        new_docs = relabeled.select(
             F.col("_iid").alias("doc_id"),
-            F.col("doc_len").cast("long").alias("doc_len"),
-            fn_expr.alias("fieldnorm"),
+            "doc_len",
+            "fieldnorm",
             "content_sha256",
-            *[F.col(c).alias(f"p_{c}") for c in pc],
+            *[f"p_{c}" for c in pc],
         )
-        delta_maps = dass.select(
-            F.col("_iid").alias("gid"), F.explode("terms").alias("t")
-        ).select(
-            F.col("t.key").alias("term_key"),
-            "gid",
-            F.col("t.tf").alias("tf"),
-        )
-    else:
-        delta_docs = delta_maps = None
 
-    # --- new docs artifact ---
-    new_docs = relabeled.select(
-        F.col("_iid").alias("doc_id"),
-        "doc_len",
-        "fieldnorm",
-        "content_sha256",
-        *[f"p_{c}" for c in pc],
-    )
-    if delta_docs is not None:
-        new_docs = new_docs.unionByName(delta_docs)
-    new_docs = new_docs.withColumn(
-        "shard", (F.col("doc_id") / cfg.shard_size).cast("int")
-    ).withColumn("local_id", (F.col("doc_id") % cfg.shard_size).cast("long"))
-    new_docs.repartitionByRange(max(1, parts // 4), "doc_id").sortWithinPartitions(
-        "doc_id"
-    ).write.parquet(fsio.join(work, "docs"))
-    _ensure_readable_parquet(fsio.join(work, "docs"), new_docs.schema)
+        # --- delta docs: tokenize, ids after the sealed block ---
+        delta = _live_delta(spark, idx, index_dir)
+        if delta is not None and delta.count() > 0:
+            prep = with_doc_terms(delta, text_col, cfg.analyzer, cfg.seed)
+            # _rowid makes the order key unique even when payload keys
+            # repeat, so every delta row gets its own deterministic doc_id
+            dass = _assign_doc_ids(
+                spark, prep, [*pc, "_rowid"], parts, pins, pin_output=True
+            )
+            dass = dass.withColumn(
+                "_iid", F.col("_iid") + F.lit(n_sealed)
+            ).withColumn("fieldnorm", _fieldnorm_expr())
+            new_docs = new_docs.unionByName(
+                dass.select(
+                    F.col("_iid").alias("doc_id"),
+                    F.col("doc_len").cast("long").alias("doc_len"),
+                    "fieldnorm",
+                    F.sha2(F.col(text_col), 256).alias("content_sha256"),
+                    *[F.col(c).alias(f"p_{c}") for c in pc],
+                )
+            )
+            new_maps = new_maps.unionByName(
+                dass.select(
+                    F.col("terms").getField("key").alias("tkeys"),
+                    F.col("terms").getField("tf").alias("ttfs"),
+                    F.col("_iid").alias("gid"),
+                    "fieldnorm",
+                )
+            )
 
-    # --- new mappings: sealed relabel join ∪ delta ---
-    old_maps = spark.read.parquet(idx._path("mappings"))
-    if "tkeys" in old_maps.columns:
-        # doc-grouped staging (r7 build layout): explode to the
-        # per-posting shape this join works in
-        old_maps = (
-            old_maps.withColumn(
-                "gid",
-                F.col("shard").cast("long") * cfg.shard_size
-                + F.col("local_id"),
-            )
-            .select("gid", F.explode(F.arrays_zip("tkeys", "ttfs")).alias("z"))
-            .select(
-                F.col("z.tkeys").alias("term_key"),
-                "gid",
-                F.col("z.ttfs").alias("tf"),
-            )
+        # --- new docs artifact + doc-grouped staging ---
+        new_docs = new_docs.withColumn(
+            "shard", (F.col("doc_id") / cfg.shard_size).cast("int")
+        ).withColumn("local_id", (F.col("doc_id") % cfg.shard_size).cast("long"))
+        new_docs.repartitionByRange(
+            max(1, parts // 4), "doc_id"
+        ).sortWithinPartitions("doc_id").write.parquet(fsio.join(work, "docs"))
+        _ensure_readable_parquet(fsio.join(work, "docs"), new_docs.schema)
+        staging = new_maps.select(
+            "tkeys",
+            "ttfs",
+            (F.col("gid") / cfg.shard_size).cast("int").alias("shard"),
+            (F.col("gid") % cfg.shard_size).cast("int").alias("local_id"),
+            F.col("fieldnorm").cast("int").alias("fieldnorm"),
         )
-    else:
-        old_maps = old_maps.withColumn(
-            "gid",
-            F.col("shard").cast("long") * cfg.shard_size + F.col("local_id"),
-        )
-    relabel_map = relabeled.select(
-        F.col("old_id").alias("gid"), F.col("_iid").alias("new_gid")
-    )
-    new_maps = (
-        old_maps.join(relabel_map, "gid")  # inner join drops tombstoned
-        .select("term_key", F.col("new_gid").alias("gid"), "tf")
-    )
-    if delta_maps is not None:
-        new_maps = new_maps.unionByName(delta_maps)
-    fns = spark.read.parquet(fsio.join(work, "docs")).select(
-        F.col("doc_id").alias("gid"), "fieldnorm"
-    )
-    vm = new_maps.join(fns, "gid").select(
-        "term_key",
-        (F.col("gid") / cfg.shard_size).cast("int").alias("shard"),
-        (F.col("gid") % cfg.shard_size).cast("long").alias("local_id"),
-        "tf",
-        "fieldnorm",
-    )
-    vm.write.parquet(fsio.join(work, "mappings"))
-    _ensure_readable_parquet(fsio.join(work, "mappings"), vm.schema)
-    relabeled.unpersist()
+        staging.write.parquet(fsio.join(work, "mappings"))
+        _ensure_readable_parquet(fsio.join(work, "mappings"), staging.schema)
+    finally:
+        if relabeled is not None:
+            relabeled.unpersist()
+        _release_rdds(spark, pins)
 
     finalize_index(spark, work, cfg, pc)
 
