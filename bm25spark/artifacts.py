@@ -49,7 +49,6 @@ def read_postings(
     keys: list[bytes],
     buckets: list[int],
     shard_size: int,
-    shards: list[int] | None = None,
     dataset=None,
 ):
     """-> {term_key: dict of block arrays} (ascending (shard, ord))."""
@@ -61,8 +60,6 @@ def read_postings(
         else ds.dataset(postings_path, format="parquet", partitioning="hive")
     )
     flt = pc.field("bucket").isin(buckets) & pc.field("term_key").isin(keys)
-    if shards is not None:
-        flt = flt & pc.field("shard").isin(shards)
     t = d.to_table(columns=_POSTING_COLS, filter=flt).sort_by(
         [("term_key", "ascending"), ("shard", "ascending"), ("block_ord", "ascending")]
     )
@@ -99,31 +96,11 @@ def read_postings(
     return out
 
 
-def read_fieldnorms(docs_path: str, n_docs: int, shards: list[int] | None = None,
-                    shard_size: int | None = None) -> np.ndarray:
-    """Dense uint8 fieldnorms indexed by doc_id (global array, or the
-    global array filled only for the requested shards)."""
+def read_fieldnorms(docs_path: str, n_docs: int) -> np.ndarray:
+    """Dense uint8 fieldnorms indexed by doc_id."""
     d = ds.dataset(docs_path, format="parquet")
-    flt = None
-    if shards is not None:
-        flt = pc.field("shard").isin(shards)
-    t = d.to_table(columns=["doc_id", "fieldnorm"], filter=flt)
+    t = d.to_table(columns=["doc_id", "fieldnorm"])
     arr = np.zeros(n_docs, dtype=np.uint8)
     ids = np.asarray(t["doc_id"])
     arr[ids] = np.asarray(t["fieldnorm"]).astype(np.uint8)
     return arr
-
-
-def read_payloads(docs_path: str, doc_ids: list[int], payload_cols: list[str]):
-    """-> {doc_id: (payload tuple)}"""
-    if not doc_ids:
-        return {}
-    d = ds.dataset(docs_path, format="parquet")
-    cols = ["doc_id"] + [f"p_{c}" for c in payload_cols]
-    t = d.to_table(columns=cols, filter=pc.field("doc_id").isin(doc_ids))
-    out = {}
-    for i in range(t.num_rows):
-        out[t["doc_id"][i].as_py()] = tuple(
-            t[f"p_{c}"][i].as_py() for c in payload_cols
-        )
-    return out

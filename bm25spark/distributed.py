@@ -27,63 +27,17 @@ from .scoring import Cache
 from .wand import TermPostings, _bytes_of, prune_blocks_batch, taat_topk_batch
 
 #: decode pruning pays when the blocks it can skip are expensive to
-#: decompress (or, at scale, to READ — lazily-fetched blocks become
-#: skipped I/O); below this many packed posting bytes per shard task
-#: the vectorized decode is cheaper than the block-metadata pass, so
-#: the shard task decodes everything (both paths are exact — this is a
+#: decompress; below this many packed posting bytes per shard task the
+#: vectorized decode is cheaper than the block-metadata pass, so the
+#: shard task decodes everything (both paths are exact — this is a
 #: pure latency knob; ``prune_min_bytes=0`` forces the pruned path).
 PRUNE_MIN_BYTES = 256 << 10
 
 
-class _OffsetMask:
-    """Global-id-indexable boolean mask over one shard's id range.
-
-    ``blocklist=False``: ``ids_local`` are the *allowed* ids (prefilter
-    semantics, P3). ``blocklist=True``: ``ids_local`` are the *blocked*
-    ids (tombstone semantics, P4) — the mask starts all-true and only
-    the listed ids are masked out, so a shard with few tombstones costs
-    O(tombstones) rows through the cogroup, never O(shard_size)."""
-
-    __slots__ = ("base", "mask")
-
-    def __init__(
-        self,
-        base: int,
-        size: int,
-        ids_local: "np.ndarray",
-        blocklist: bool = False,
-    ):
-        self.base = base
-        self.mask = np.full(size, blocklist, dtype=bool)
-        valid = (ids_local >= 0) & (ids_local < size)
-        self.mask[ids_local[valid]] = not blocklist
-
-    def __getitem__(self, idx):
-        return self.mask[np.asarray(idx) - self.base]
-
-
-class _OffsetFieldnorms:
-    """Global-id-indexable view over one shard's fieldnorm slice.
-    Exposes ``base``/``__len__`` so the taat kernel's dense path can
-    allocate a shard-local accumulator and map ids onto it."""
-
-    __slots__ = ("base", "arr")
-
-    def __init__(self, base: int, arr: np.ndarray):
-        self.base = base
-        self.arr = arr
-
-    def __getitem__(self, idx):
-        return self.arr[np.asarray(idx) - self.base]
-
-    def __len__(self):
-        return len(self.arr)
-
-
 def _shard_fieldnorms(
     docs_path: str, shard: int, shard_size: int
-) -> _OffsetFieldnorms:
-    """One shard's fieldnorm slice as a global-id-indexable view
+) -> np.ndarray:
+    """One shard's uint8 fieldnorms indexed by shard-local id
     (row-group-pruned Arrow read of the docs artifact)."""
     import pyarrow.compute as pc
     import pyarrow.dataset as ds
@@ -96,7 +50,7 @@ def _shard_fieldnorms(
     ids = np.asarray(t["doc_id"])
     arr = np.zeros(shard_size, dtype=np.uint8)
     arr[ids - base] = np.asarray(t["fieldnorm"]).astype(np.uint8)
-    return _OffsetFieldnorms(base, arr)
+    return arr
 
 
 def _termpostings_from_blocks(
@@ -108,8 +62,9 @@ def _termpostings_from_blocks(
     k1: float,
     b: float,
 ) -> dict:
-    """Assemble one shard's block rows into TermPostings, keyed by
-    term key in ascending key order.
+    """Assemble one shard's block rows into TermPostings in
+    shard-local ids (global id - ``base``), keyed by term key in
+    ascending key order.
     ``term_info``: key -> (df, wand_fn, wand_tf)."""
     pdf = pdf.sort_values(["term_key", "block_ord"], kind="stable")
     out: dict = {}
@@ -120,8 +75,8 @@ def _termpostings_from_blocks(
             cache=Cache(n_docs, df_, k1, b, avgdl),
             wand_fn=int(wfn),
             wand_tf=int(wtf),
-            min_doc=g["min_doc"].to_numpy(np.int64),
-            max_doc=g["max_doc"].to_numpy(np.int64),
+            min_doc=g["min_doc"].to_numpy(np.int64) - base,
+            max_doc=g["max_doc"].to_numpy(np.int64) - base,
             count=g["count"].to_numpy(np.int64),
             block_fn=g["wand_fn"].to_numpy(np.int64),
             block_tf=g["wand_tf"].to_numpy(np.int64),
@@ -129,7 +84,7 @@ def _termpostings_from_blocks(
             ids_bytes=[bytes(x) for x in g["ids_bytes"]],
             tfs_meta=g["tfs_meta"].tolist(),
             tfs_bytes=[bytes(x) for x in g["tfs_bytes"]],
-            shard_base=np.full(len(g), base, dtype=np.int64),
+            shard_base=np.zeros(len(g), dtype=np.int64),
         )
     return out
 
@@ -245,12 +200,30 @@ def search_distributed_batch(
     driver.
     """
     idx = Bm25Index(spark, index_dir)
+    qterms, stats = _analyze_batch(idx, queries)
     return _ordered_by_query(
         _sealed_topk_df(
-            idx, queries, k, round_score, prefilter, blocked, prune_min_bytes
+            idx, qterms, stats, k, round_score, prefilter, blocked,
+            prune_min_bytes,
         ),
         idx.payload_cols,
     )
+
+
+def _analyze_batch(
+    idx: Bm25Index, queries: dict[str, str]
+) -> tuple[dict[str, list[bytes]], dict[bytes, dict]]:
+    """ONE analyze pass + ONE batched dictionary read for M queries ->
+    ``(qterms, stats)``: ``qterms`` maps each query id with at least
+    one indexed term to its indexed term keys in query order (absent
+    terms are skipped); ``stats`` is the dictionary row of every
+    indexed key."""
+    qkeys = {qid: idx.query_keys(text) for qid, text in queries.items()}
+    stats = idx.term_stats(sorted({key for ks in qkeys.values() for key in ks}))
+    qterms = {
+        qid: [key for key in keys if key in stats] for qid, keys in qkeys.items()
+    }
+    return {qid: keys for qid, keys in qterms.items() if keys}, stats
 
 
 def _ordered_by_query(df: DataFrame, payload_cols: list[str]) -> DataFrame:
@@ -266,32 +239,23 @@ def _ordered_by_query(df: DataFrame, payload_cols: list[str]) -> DataFrame:
 
 def _sealed_topk_df(
     idx: Bm25Index,
-    queries: dict[str, str],
+    qterms: dict[str, list[bytes]],
+    stats: dict[bytes, dict],
     k: int,
     round_score: int | None,
     prefilter: DataFrame | None,
     blocked: DataFrame | None,
     prune_min_bytes: int | None,
 ) -> DataFrame:
-    """:func:`search_distributed_batch` before the final ordering."""
+    """:func:`search_distributed_batch` before the final ordering, over
+    an :func:`_analyze_batch` result."""
     from pyspark.sql import Window
 
     spark = idx.spark
-    all_keys: set[bytes] = set()
-    qkeys: dict[str, list[bytes]] = {}
-    for qid, text in queries.items():
-        qkeys[qid] = idx.query_keys(text)
-        all_keys.update(qkeys[qid])
-    stats = idx.term_stats(sorted(all_keys))
-    present = sorted(key for key in all_keys if key in stats)
-    qterms = {
-        qid: [key for key in keys if key in stats]
-        for qid, keys in qkeys.items()
-    }
-    qterms = {qid: keys for qid, keys in qterms.items() if keys}
     out_cols = "query_id STRING, doc_id BIGINT, score DOUBLE"
     if not qterms:
         return idx.empty_df(with_query_id=True)
+    present = sorted({key for keys in qterms.values() for key in keys})
 
     n_docs, avgdl, k1, b = idx.n_docs, idx.avgdl, idx.k1, idx.b
     shard_size = idx.shard_size
@@ -348,23 +312,21 @@ def _sealed_topk_df(
         allowed_mask = None
         if allowed_pdf is not None:
             # ONE shard-local mask shared by every query in the batch:
-            # allowlist = prefilter (P3), blocklist = tombstones (P4);
-            # an empty right side means "allow everything" for a
-            # blocklist and "allow nothing" for an allowlist — both
-            # fall out of the fill
-            allowed_mask = _OffsetMask(
-                base,
-                shard_size,
-                allowed_pdf["doc_id"].to_numpy(np.int64) - base,
-                blocklist=mask_blocklist,
+            # allowlist = prefilter (P3), blocklist = tombstones (P4).
+            # A blocklist mask starts all-true and only the listed ids
+            # are masked out, so a shard with few tombstones costs
+            # O(tombstones) rows through the cogroup. An empty right
+            # side means "allow everything" for a blocklist and "allow
+            # nothing" for an allowlist — both fall out of the fill
+            ids = allowed_pdf["doc_id"].to_numpy(np.int64) - base
+            allowed_mask = np.full(shard_size, mask_blocklist)
+            allowed_mask[ids[(ids >= 0) & (ids < shard_size)]] = (
+                not mask_blocklist
             )
-        # batched θ-seeded decode pre-cut: each query's provably-
-        # irrelevant blocks are identified from block-max metadata, and
-        # only the UNION of kept blocks is ever decompressed — decoded
-        # ONCE (shared cache) and reused by every query's kernel run;
-        # per-query results stay bit-identical (see prune_blocks_batch).
-        # Size-gated: below the threshold, plain decode-once is faster
-        # than pruning.
+        # decode each term ONCE and reuse it for every query's kernel
+        # run; above the size gate, single-term queries first skip the
+        # blocks that provably cannot reach their top-k (see
+        # prune_blocks_batch; results stay bit-identical)
         if sum(_bytes_of(t) for t in tps.values()) >= prune_gate:
             tps, _ = prune_blocks_batch(
                 tps, qterms, fns, k, allowed_mask=allowed_mask
@@ -372,10 +334,12 @@ def _sealed_topk_df(
         else:
             for tp in tps.values():
                 tp.decoded = tp.decode_all()  # decode ONCE, reuse per query
-        return pd.DataFrame(
+        out = pd.DataFrame(
             taat_topk_batch(tps, qterms, fns, k, allowed_mask=allowed_mask),
             columns=["query_id", "doc_id", "score"],
         )
+        out["doc_id"] += base
+        return out
 
     if allowed_df is None:
         def run_batch_grouped(key, pdf):

@@ -1055,27 +1055,22 @@ def search_with_delta_batch_df(
     (query_id, score desc, payload cols)."""
     from pyspark.sql import Window
 
-    from .distributed import _ordered_by_query, _sealed_topk_df
+    from .distributed import _analyze_batch, _ordered_by_query, _sealed_topk_df
 
     idx = Bm25Index(spark, index_dir)
     gen = _gen_of(idx.meta)
     pc = idx.payload_cols
 
-    # ONE analyze pass + ONE batched dictionary read for the whole
-    # batch; the live filter and the delta leg both derive from it
-    qkeys = {qid: idx.query_keys(text) for qid, text in queries.items()}
-    stats = idx.term_stats(sorted({k_ for ks in qkeys.values() for k_ in ks}))
-    qterms = {
-        qid: [k_ for k_ in keys if k_ in stats] for qid, keys in qkeys.items()
-    }
-    qterms = {qid: keys for qid, keys in qterms.items() if keys}
+    # the sealed leg and the delta leg share ONE analyze pass
+    qterms, stats = _analyze_batch(idx, queries)
     if not qterms:
         return idx.empty_df(with_query_id=True)
 
     k_fetch = k + (slack if round_score is not None else 0)
     merged = _sealed_topk_df(
         idx,
-        {qid: queries[qid] for qid in qterms},
+        qterms,
+        stats,
         k_fetch,
         round_score=None,
         prefilter=prefilter,

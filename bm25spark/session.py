@@ -14,12 +14,32 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_cores() -> int:
+    """``SPARK_GRAFT_CPUS``, else every CPU of this host."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
+def _default_driver_mem() -> str:
+    """``BM25SPARK_DRIVER_MEM``, else the smaller of 16g and half the
+    host's physical memory. In local mode the driver JVM hosts every
+    executor thread, so its heap is the whole storage+execution pool:
+    8g forced the tokenized-corpus cache to evict mid-build at the
+    bench's escalated scale, and 16g stays comfortable on a large host
+    without exceeding a small one (real clusters size executor heaps
+    themselves)."""
+    env = os.environ.get("BM25SPARK_DRIVER_MEM")
+    if env:
+        return env
+    phys_mib = (os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")) >> 20
+    return f"{min(16 << 10, phys_mib // 2)}m"
+
+
 def get_spark(
     app: str = "bm25spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or _default_cores()
     shuffle_partitions = shuffle_partitions or max(32, cores)
     return (
         SparkSession.builder.master(f"local[{cores}]")
@@ -39,13 +59,7 @@ def get_spark(
             "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
             "2",
         )
-        # local mode: the driver JVM hosts every executor thread, so
-        # its heap is the whole storage+execution pool. 8g forced the
-        # tokenized-corpus cache to evict mid-build at the bench's
-        # escalated scale (measured r7); 16g on a 128 GiB box leaves
-        # the pool comfortable and stays parameterized for real
-        # clusters (where executors size their own heaps)
-        .config("spark.driver.memory", os.environ.get("BM25SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

@@ -18,8 +18,15 @@ they run on the driver or inside executor tasks:
   this engine's SIMD; for typical queries this beats a per-document
   Python loop by orders of magnitude, and the distributed form runs
   it per doc-shard (bounded work per task) with a global top-k merge.
+  A shard task scores in shard-local ids: its fieldnorm slice and
+  mask are plain arrays, and it adds the shard base to its output.
 
-Both honor the reference's semantics: threshold comparisons are
+:func:`prune_blocks_batch` is the static stand-in for the reference's
+dynamic block skipping (search.rs:243-279): a term that is a whole
+query by itself skips the blocks whose upper bound falls below the
+running k-th score; every other term is decoded whole.
+
+Both kernels honor the reference's semantics: threshold comparisons are
 strict (search.rs:161,203: candidates must *beat* the running k-th
 score; docs scoring 0 never surface), absent query terms are skipped
 (search.rs:55-62), and ties are broken by ascending doc id
@@ -48,7 +55,7 @@ class TermPostings:
     cache: Cache  # per-term score cache (s0/s1)
     wand_fn: int
     wand_tf: int
-    min_doc: np.ndarray  # int64, global ids
+    min_doc: np.ndarray  # int64, ids of the fieldnorm array scored against
     max_doc: np.ndarray  # int64
     count: np.ndarray  # int32
     block_fn: np.ndarray  # uint8/int
@@ -57,7 +64,7 @@ class TermPostings:
     ids_bytes: list[bytes]
     tfs_meta: list[int]
     tfs_bytes: list[bytes]
-    shard_base: np.ndarray  # int64 global base of each block's shard
+    shard_base: np.ndarray  # int64 id base of each block's shard (0: local)
     #: optional pre-decoded (ids, tfs) — a resident server memoizes the
     #: decode of hot terms (Bm25Index._decoded_cache); kernels treat it
     #: as read-only
@@ -104,7 +111,7 @@ class TermPostings:
         return float(self.cache.evaluate(int(self.block_fn[i]), int(self.block_tf[i])))
 
     def decode(self, i: int) -> tuple[np.ndarray, np.ndarray]:
-        """-> (global doc ids int64, tfs int64) of block i."""
+        """-> (doc ids int64, tfs int64) of block i."""
         n = int(self.count[i])
         local_min = int(self.min_doc[i] - self.shard_base[i])
         ids = packing.decompress_document_ids(
@@ -398,38 +405,16 @@ def taat_topk(
         # per doc in the same term order as the sparse path, so final
         # scores are bit-identical. Memory: 8 B/doc, bounded by the
         # driver-path guardrail (or shard_size on the distributed
-        # path, where ids are global and `fieldnorms` is an
-        # offset-carrying shard view).
-        # Shard-view protocol (structural, not duck-typed): a plain
-        # ndarray is a GLOBAL fieldnorm array (base 0; np.ndarray's own
-        # `.base` is the unrelated buffer parent and must not be read);
-        # anything else MUST carry an explicit integer `base` offset
-        # (e.g. distributed._OffsetFieldnorms). A wrapper without one
-        # is refused rather than silently scored at base 0 — a plain
-        # offset slice passed directly would mis-map global ids.
-        if isinstance(fieldnorms, np.ndarray):
-            base = 0
-        else:
-            try:
-                base = int(fieldnorms.base)
-            except (AttributeError, TypeError, ValueError) as e:
-                raise TypeError(
-                    "taat_topk dense path: non-ndarray fieldnorms must "
-                    "expose an integer .base global-id offset (see "
-                    "bm25spark.distributed._OffsetFieldnorms); got "
-                    f"{type(fieldnorms).__name__}"
-                ) from e
+        # path, where a shard task scores in shard-local ids).
         dense = np.zeros(len(fieldnorms), dtype=np.float64)
         for t, (ids, tfs) in zip(terms, decoded):
-            loc = ids if base == 0 else ids - base
-            dense[loc] += np.asarray(
+            dense[ids] += np.asarray(
                 t.cache.evaluate(fieldnorms[ids], tfs), dtype=np.float64
             )
-        local = np.flatnonzero(dense > 0.0)
-        scores = dense[local]
-        candidates = local if base == 0 else local + base
+        candidates = np.flatnonzero(dense > 0.0)
+        scores = dense[candidates]
         if allowed_mask is not None and len(candidates):
-            keepm = np.asarray(allowed_mask[candidates], dtype=bool)
+            keepm = allowed_mask[candidates]
             candidates, scores = candidates[keepm], scores[keepm]
     else:
         candidates = np.unique(np.concatenate([ids for ids, _ in decoded]))
@@ -519,260 +504,81 @@ def _slice_blocks(tp: TermPostings, keep: np.ndarray) -> TermPostings:
     )
 
 
-def _range_max(
-    tp_u: TermPostings, ubs_u: np.ndarray, lo: np.ndarray, hi: np.ndarray
-) -> np.ndarray:
-    """max block_ub of term ``tp_u`` over its blocks overlapping each
-    query range [lo[j], hi[j]] (0.0 where none overlap). Blocks ascend
-    in doc id, so the overlapping set is the contiguous run [a, b);
-    the tiny Python loop is bounded by the number of QUERY blocks, and
-    each iteration is a NumPy slice-max."""
-    a = np.searchsorted(tp_u.max_doc, lo, side="left")
-    b = np.searchsorted(tp_u.min_doc, hi, side="right")
-    out = np.zeros(len(lo), dtype=np.float64)
-    for j in range(len(lo)):
-        if a[j] < b[j]:
-            out[j] = ubs_u[a[j]:b[j]].max()
-    return out
+def _decode_blocks(
+    tp: TermPostings, idx: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """(ids, tfs) of the ascending block indices ``idx``, in block
+    order — sliced from ``tp.decoded`` when a resident server already
+    decoded the term, else a batched decode of just those blocks."""
+    if tp.decoded is None:
+        return _slice_blocks(tp, idx).decode_all()
+    ends = np.cumsum(tp.count.astype(np.int64))
+    sel = np.concatenate(
+        [np.arange(ends[i] - tp.count[i], ends[i]) for i in idx.tolist()]
+    )
+    return tp.decoded[0][sel], tp.decoded[1][sel]
 
 
-def _acc_range_max(
-    acc_ids: np.ndarray, acc_sc: np.ndarray, lo: np.ndarray, hi: np.ndarray
-) -> np.ndarray:
-    """max accumulated partial score among docs with id in [lo[j],
-    hi[j]] (0.0 where none) — the joint bound over all already-decoded
-    terms: max_d Σ_u c_u(d) is far tighter than Σ_u max_d c_u(d) when
-    no single doc tops every term."""
-    a = np.searchsorted(acc_ids, lo, side="left")
-    b = np.searchsorted(acc_ids, hi, side="right")
-    out = np.zeros(len(lo), dtype=np.float64)
-    for j in range(len(lo)):
-        if a[j] < b[j]:
-            out[j] = acc_sc[a[j]:b[j]].max()
-    return out
+def _single_term_cut(
+    tp: TermPostings, fieldnorms: np.ndarray, k: int, allowed_mask=None
+) -> TermPostings:
+    """Exact decode pre-cut for a term that is a whole query by itself:
+    the kept blocks with ``.decoded`` attached.
 
-
-class _BlockDecodeCache:
-    """Memoizes per-block decodes of ONE TermPostings across pruning
-    passes (θ-seeding chunks; the M queries of a batch), so each packed
-    block is decompressed at most once no matter how many queries or
-    refinement rounds touch it. Blocks are non-overlapping and
-    ascending in doc id (build invariant: ascending (shard,
-    block_ord)), so concatenating cached blocks in index order
-    reproduces ``decode_all``'s ascending-id output exactly."""
-
-    __slots__ = ("tp", "_ids", "_tfs")
-
-    def __init__(self, tp: TermPostings):
-        self.tp = tp
-        self._ids: dict[int, np.ndarray] = {}
-        self._tfs: dict[int, np.ndarray] = {}
-        if tp.decoded is not None:
-            # a resident server pre-decoded the whole term — split the
-            # arrays back per block so fetches are free
-            counts = tp.count.astype(np.int64)
-            offs = np.cumsum(counts)[:-1]
-            for i, (a, t) in enumerate(
-                zip(np.split(tp.decoded[0], offs), np.split(tp.decoded[1], offs))
-            ):
-                self._ids[i], self._tfs[i] = a, t
-
-    def fetch(self, idx: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """(global ids int64, tfs int64) of the given ascending block
-        indices, concatenated in block order (= ascending doc id)."""
-        il = [int(i) for i in idx]
-        missing = [i for i in il if i not in self._ids]
-        if missing:
-            marr = np.asarray(missing, dtype=np.int64)
-            ids, tfs = _slice_blocks(self.tp, marr).decode_all()
-            counts = self.tp.count[marr].astype(np.int64)
-            offs = np.cumsum(counts)[:-1]
-            for i, a, t in zip(missing, np.split(ids, offs), np.split(tfs, offs)):
-                self._ids[i], self._tfs[i] = a, t
-        if not il:
-            e = np.empty(0, dtype=np.int64)
-            return e, e
-        return (
-            np.concatenate([self._ids[i] for i in il]),
-            np.concatenate([self._tfs[i] for i in il]),
-        )
-
-
-def _prune_keeps(
-    tps: list[TermPostings],
-    ubs: list[np.ndarray],
-    caches: list["_BlockDecodeCache"],
-    fieldnorms,
-    k: int,
-    allowed_mask,
-) -> list[np.ndarray]:
-    """Kept-block indices per term for ONE query — the iterative
-    θ-refinement core of :func:`prune_blocks_batch`.
-
-    Terms are processed in descending token-upper-bound order; EVERY
-    term runs the chunked θ-seeded decode loop (blocks in descending
-    total-upper-bound order, θ refreshed as true contributions merge
-    into per-doc partial sums), so a term can self-cut mid-decode and
-    later terms start with the stacked θ of all earlier ones — which
-    is what lets equal-upper-bound multi-term queries (where a
-    T0-only θ can never beat the summed bound) still cut.
-
-    The total upper bound of block B of term t at term-entry time:
-
-        UB(B) = block_ub(B)                                  (own term)
-              + max{acc partial sum of docs in B's id range}  (decoded
-                terms, jointly — max of SUM, not sum of maxes)
-              + Σ_{u not yet processed} max{block_ub of u's blocks
-                overlapping B's id range}                     (future)
-
-    Exactness: partial sums over decoded kept blocks are true-score
-    LOWER bounds, so the k-th best masked partial θ is a lower bound
-    on the final k-th score. UB(B) upper-bounds the true score of
-    every doc d in B that still has all its blocks: acc(d) is then d's
-    exact decoded-terms contribution (<= the range max), and the
-    future terms are bounded by their FULL block sets' overlap maxima.
-    A doc that already LOST a block was proven < θ when that block was
-    cut (strict <, θ monotone), so under-counting it in acc cannot
-    wrongly keep... or prune anything about it that matters. Hence a
-    skipped block contains only docs strictly below the final k-th
-    (can neither enter nor tie), and every true top-k doc keeps ALL
-    its blocks (any block containing it has UB >= its true score >= θ,
-    by induction over terms) and is scored exactly. ``taat_topk`` over
-    the kept blocks is therefore bit-identical to the unpruned run
-    (hypothesis-fuzzed, single and batch)."""
+    Blocks are decoded in chunks of descending block upper bound while
+    a bounded buffer tracks θ, the k-th best (masked) score so far. One
+    contribution per doc, so θ needs no per-doc grouping, and a stale θ
+    is still a lower bound on the final k-th score — it only delays the
+    cut by one chunk. The first chunk is just big enough to seed θ
+    (≈k postings); later chunks stay small so the cut can land early
+    on few-block terms. Once the next block's upper bound is strictly
+    below θ, so is every remaining block's: their docs can neither
+    enter nor tie into the top-k, and they are never decoded. Block
+    upper bounds are the exact kernel scores of each block's best
+    posting and θ is a kernel score too, so the strict ``<`` is exact.
+    The kept blocks are exactly the decoded ones; their arrays are the
+    chunks re-sorted by id."""
     from .config import BLOCK_SIZE
 
-    T = len(tps)
-    order = sorted(range(T), key=lambda i: -tps[i].token_upper_bound())
-    theta = 0.0
-    acc_ids = np.empty(0, dtype=np.int64)
-    acc_sc = np.empty(0, dtype=np.float64)
-    keeps: list[np.ndarray | None] = [None] * T
-    # multi-term fp-rigor margin (single-term comparisons are exact:
-    # block_ub IS the max kernel fp score of the block, and θ values
-    # are kernel-identical single contributions). For T > 1 both sides
-    # of a cut comparison carry order-dependent rounding: θ partials
-    # accumulate in desc-token-ub order (can land a few ulps above the
-    # kernel's query-order sum) and UB(B) is itself an fp sum of
-    # non-negative bound components (can land a few ulps below the
-    # math bound, hence below a kernel score it must dominate). For
-    # non-negative addends any-order fp summation is within
-    # (1+eps)^(n-1) of the math sum in both directions, so deflating θ
-    # by (1 - 16*(T+2)*eps) — far below 1/(1+eps)^(2T+4) — makes
-    # every strict cut rigorous at a ~1e-14 relative cost to pruning
-    # power. Bit-identity of the final top-k is what the fuzz pins.
-    theta_slack = 1.0 - 16.0 * (T + 2) * float(np.finfo(np.float64).eps)
-
-    def masked(tp, ids, tfs):
-        if allowed_mask is not None and len(ids):
-            m = np.asarray(allowed_mask[ids], dtype=bool)
+    ubs = _block_ubs(tp)
+    nb = tp.n_blocks
+    o = np.argsort(-ubs, kind="stable")
+    pos, n_surv, theta = 0, 0, 0.0
+    topk = np.empty(0, dtype=np.float64)
+    parts: list[tuple[np.ndarray, np.ndarray]] = []
+    while pos < nb:
+        step = max(1, -(-k // BLOCK_SIZE)) if pos == 0 else 8
+        chunk = o[pos : pos + step]
+        if n_surv >= k and ubs[chunk[0]] < theta:
+            break
+        ids, tfs = _decode_blocks(tp, np.sort(chunk))
+        parts.append((ids, tfs))
+        if allowed_mask is not None:
+            m = allowed_mask[ids]
             ids, tfs = ids[m], tfs[m]
-        if not len(ids):
-            return ids, np.empty(0, dtype=np.float64)
-        return ids, np.asarray(
+        sc = np.asarray(
             tp.cache.evaluate(fieldnorms[ids], tfs), dtype=np.float64
         )
-
-    def merge(ids, sc):
-        nonlocal acc_ids, acc_sc, theta
-        if len(ids):
-            u, inv = np.unique(
-                np.concatenate([acc_ids, ids]), return_inverse=True
-            )
-            s = np.zeros(len(u), dtype=np.float64)
-            np.add.at(s, inv, np.concatenate([acc_sc, sc]))
-            acc_ids, acc_sc = u, s
-        if len(acc_sc) >= k:
-            kth = float(np.partition(acc_sc, len(acc_sc) - k)[len(acc_sc) - k])
-            theta = kth * theta_slack  # see theta_slack rationale above
-
-    for j, ti in enumerate(order):
-        tp, cache = tps[ti], caches[ti]
-        nb = tp.n_blocks
-        tot = ubs[ti]
-        if T > 1 and j > 0:
-            tot = tot.copy()
-            for u in order[j + 1 :]:
-                tot += _range_max(tps[u], ubs[u], tp.min_doc, tp.max_doc)
-            tot += _acc_range_max(acc_ids, acc_sc, tp.min_doc, tp.max_doc)
-        if T == 1:
-            # single term: chunked θ-seeding decode in descending
-            # block-ub order; a stale θ is still a valid lower bound,
-            # it only delays the cut by at most one chunk. First chunk
-            # just big enough to seed θ (≈k postings); later chunks
-            # stay small so the cut can land early even on few-block
-            # terms. One contribution per doc, so θ needs no per-doc
-            # grouping — a bounded top-k buffer of raw masked scores
-            # (never re-partitioning the full history).
-            o = np.argsort(-tot, kind="stable")
-            pos, cut = 0, nb
-            topk_buf = np.empty(0, dtype=np.float64)
-            n_surv = 0
-            while pos < nb:
-                step = max(1, -(-k // BLOCK_SIZE)) if pos == 0 else 8
-                chunk = o[pos : pos + step]
-                if n_surv >= k and tot[chunk[0]] < theta:
-                    cut = pos  # max ub of every remaining block < θ
-                    break
-                ids, tfs = cache.fetch(np.sort(chunk))
-                _, sc = masked(tp, ids, tfs)
-                n_surv += len(sc)
-                topk_buf = np.concatenate([topk_buf, sc])
-                if len(topk_buf) > k:
-                    topk_buf = np.partition(topk_buf, len(topk_buf) - k)[
-                        len(topk_buf) - k :
-                    ]
-                if n_surv >= k:
-                    theta = float(topk_buf.min())
-                pos += step
-            keeps[ti] = np.sort(o[:cut])
-        elif j == 0:
-            # strongest term decoded whole in ONE batched unpack (its
-            # own chunked self-cut is near-impossible: during its loop
-            # θ <= its token ub while tot also carries every other
-            # term's overlap maxima); its masked contributions seed the
-            # accumulator — fetch order is ascending block = ascending
-            # doc id, so acc is sorted without an argsort
-            ids, tfs = cache.fetch(np.arange(nb))
-            acc_ids, acc_sc = masked(tp, ids, tfs)
-            if len(acc_sc) >= k:
-                theta = (
-                    float(
-                        np.partition(acc_sc, len(acc_sc) - k)[len(acc_sc) - k]
-                    )
-                    * theta_slack  # the CUT comparisons sum fp bounds
-                )
-            keeps[ti] = np.arange(nb)
-        else:
-            # one-shot cut against the stacked θ, then ONE decode +
-            # ONE merge so the next term sees the refined θ (the last
-            # term's merge cannot prune anything further — its kept
-            # blocks are decoded lazily by the kernel via the cache)
-            keep = (
-                np.flatnonzero(tot >= theta) if theta > 0.0 else np.arange(nb)
-            )
-            keeps[ti] = keep
-            if j < T - 1 and len(keep):
-                ids, tfs = cache.fetch(keep)
-                merge(*masked(tp, ids, tfs))
-    return keeps  # type: ignore[return-value]
+        n_surv += len(sc)
+        topk = np.concatenate([topk, sc])
+        if len(topk) > k:
+            topk = np.partition(topk, len(topk) - k)[len(topk) - k :]
+        if n_surv >= k:
+            theta = float(topk.min())
+        pos += step
+    if pos < nb:
+        tp = _slice_blocks(tp, np.sort(o[:pos]))
+    elif tp.decoded is not None:
+        return tp
+    ids = np.concatenate([p[0] for p in parts])
+    tfs = np.concatenate([p[1] for p in parts])
+    by_id = np.argsort(ids, kind="stable")
+    tp.decoded = (ids[by_id], tfs[by_id])
+    return tp
 
 
-def _bytes_of(tp: TermPostings, idx=None) -> int:
-    rng = range(tp.n_blocks) if idx is None else idx
-    return sum(len(tp.ids_bytes[i]) + len(tp.tfs_bytes[i]) for i in rng)
-
-
-def _apply_keep(
-    tp: TermPostings, keep: np.ndarray, cache: "_BlockDecodeCache"
-) -> TermPostings:
-    """TermPostings restricted to ``keep`` with the kernel-ready
-    decoded arrays attached (assembled from the cache — nothing is
-    decompressed twice)."""
-    out = tp if len(keep) == tp.n_blocks else _slice_blocks(tp, keep)
-    if len(keep):
-        out.decoded = cache.fetch(keep)
-    return out
+def _bytes_of(tp: TermPostings) -> int:
+    return sum(map(len, tp.ids_bytes)) + sum(map(len, tp.tfs_bytes))
 
 
 def prune_blocks(
@@ -781,12 +587,10 @@ def prune_blocks(
     k: int,
     allowed_mask=None,
 ) -> tuple[list[TermPostings], dict]:
-    """Exact block-level decode pruning for one query: drop whole
-    posting blocks that provably cannot place a document in the top-k,
-    BEFORE decompressing them — a one-query call of
-    :func:`prune_blocks_batch`. Term order is kept (``taat_topk`` sums
-    in input order), so ``taat_topk`` over the pruned terms is
-    bit-identical to the unpruned run.
+    """Exact block-level decode pruning for one query — a one-query
+    call of :func:`prune_blocks_batch`. Term order is kept
+    (``taat_topk`` sums in input order), so ``taat_topk`` over the
+    pruned terms is bit-identical to the unpruned run.
 
     Returns (pruned_terms, stats) with stats = {blocks_total,
     blocks_kept, bytes_total, bytes_kept}."""
@@ -804,59 +608,42 @@ def prune_blocks_batch(
     k: int,
     allowed_mask=None,
 ) -> tuple[dict, dict]:
-    """Batched exact decode pruning: for M queries sharing one shard's
-    posting blocks, compute each query's kept-block set with
-    :func:`_prune_keeps` (per-block decodes memoized ACROSS queries by
-    a shared cache) and decode only the UNION of kept blocks per term
-    — a block is decompressed iff at least one query might need it.
-    Running ``taat_topk`` per query over the union-kept terms is still
-    bit-identical per query: a superset of a query's own kept blocks
-    only adds docs that provably score strictly below that query's
-    k-th, which can neither enter nor tie into its top-k.
+    """Batched exact decode pruning for M queries sharing one shard's
+    posting blocks. A term that is a whole query by itself, and part of
+    no multi-term query of the batch, is cut once by
+    :func:`_single_term_cut` (the same k and mask serve every query).
+    Every other term a query uses is decoded whole: a static pre-cut
+    of multi-term queries never paid for its per-block bookkeeping.
+    Running ``taat_topk`` per query over the result is bit-identical to
+    the unpruned run.
 
     ``term_map``: {term_key: TermPostings}; ``qterms``:
-    {query_id: [term_key, ...]}. Returns ({term_key: pruned
-    TermPostings with .decoded attached}, stats) — terms whose blocks
-    no query keeps are dropped from the map."""
+    {query_id: [term_key, ...]}. Returns ({term_key: TermPostings with
+    .decoded attached}, stats) — terms no query uses are dropped."""
     alive = {key: tp for key, tp in term_map.items() if tp.n_blocks}
+    nbytes = {key: _bytes_of(tp) for key, tp in alive.items()}
     stats = {
         "blocks_total": sum(t.n_blocks for t in alive.values()),
-        "bytes_total": sum(_bytes_of(t) for t in alive.values()),
+        "bytes_total": sum(nbytes.values()),
         "blocks_kept": 0,
         "bytes_kept": 0,
     }
-    if not alive or k <= 0:
-        stats["blocks_kept"] = stats["blocks_total"]
-        stats["bytes_kept"] = stats["bytes_total"]
-        for tp in alive.values():
-            if tp.decoded is None:
-                tp.decoded = tp.decode_all()
-        return alive, stats
-    ubs = {key: _block_ubs(tp) for key, tp in alive.items()}
-    caches = {key: _BlockDecodeCache(tp) for key, tp in alive.items()}
-    union = {
-        key: np.zeros(tp.n_blocks, dtype=bool) for key, tp in alive.items()
-    }
+    single: set = set()
+    multi: set = set()
     for qkeys in qterms.values():
         present = [key for key in qkeys if key in alive]
-        if not present:
-            continue
-        keeps = _prune_keeps(
-            [alive[key] for key in present],
-            [ubs[key] for key in present],
-            [caches[key] for key in present],
-            fieldnorms,
-            k,
-            allowed_mask,
-        )
-        for key, keep in zip(present, keeps):
-            union[key][keep] = True
+        (single if len(present) == 1 else multi).update(present)
     out = {}
     for key, tp in alive.items():
-        keep = np.flatnonzero(union[key])
-        stats["blocks_kept"] += len(keep)
-        stats["bytes_kept"] += _bytes_of(tp, keep.tolist())
-        pruned = _apply_keep(tp, keep, caches[key])
-        if pruned.n_blocks:
-            out[key] = pruned
+        if key in single and key not in multi and k > 0:
+            tp = _single_term_cut(tp, fieldnorms, k, allowed_mask)
+            nbytes[key] = _bytes_of(tp)
+        elif key in single or key in multi or k <= 0:
+            if tp.decoded is None:
+                tp.decoded = tp.decode_all()
+        else:
+            continue
+        stats["blocks_kept"] += tp.n_blocks
+        stats["bytes_kept"] += nbytes[key]
+        out[key] = tp
     return out, stats

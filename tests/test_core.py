@@ -587,6 +587,8 @@ class TestPruneBlocksProperty:
         got = taat_topk(pruned, fieldnorms, k, allowed_mask=mask)
         assert got == want, (seed, n_docs, k, stats)
         assert stats["blocks_kept"] <= stats["blocks_total"]
+        if n_terms > 1:  # only single-term queries are cut
+            assert stats["blocks_kept"] == stats["blocks_total"], stats
 
 
 class TestPruneBlocksBatchProperty:
@@ -658,4 +660,36 @@ class TestPruneBlocksBatchProperty:
                 fieldnorms, k, allowed_mask=mask,
             )
             assert got == want[qid], (seed, qid, k, stats)
+            if len(qkeys) > 1:  # terms of multi-term queries stay whole
+                assert all(
+                    pruned[key].n_blocks == term_map[key].n_blocks
+                    for key in qkeys
+                ), (seed, qid)
         assert stats["blocks_kept"] <= stats["blocks_total"]
+
+
+class TestSessionDefaults:
+    """JVM-free: the SparkSession defaults derive from the host unless
+    SPARK_GRAFT_CPUS / BM25SPARK_DRIVER_MEM override them."""
+
+    def test_env_overrides(self, monkeypatch):
+        from bm25spark import session
+
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+        monkeypatch.setenv("BM25SPARK_DRIVER_MEM", "2g")
+        assert session._default_cores() == 3
+        assert session._default_driver_mem() == "2g"
+
+    def test_host_derived(self, monkeypatch):
+        from bm25spark import session
+
+        monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+        monkeypatch.delenv("BM25SPARK_DRIVER_MEM", raising=False)
+        monkeypatch.setattr(session.os, "cpu_count", lambda: 6)
+        conf = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": (15 << 30) // 4096}
+        monkeypatch.setattr(session.os, "sysconf", conf.__getitem__)
+        assert session._default_cores() == 6
+        assert session._default_driver_mem() == f"{(15 << 10) // 2}m"
+        # a large host is capped at 16g
+        conf["SC_PHYS_PAGES"] = (128 << 30) // 4096
+        assert session._default_driver_mem() == f"{16 << 10}m"
