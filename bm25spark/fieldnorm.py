@@ -7,8 +7,10 @@ increment (2, 4, 8, ...). `length_to_fieldnorm` rounds *down* to the
 nearest representable length (bm25.rs:278-283), so BM25 scores are
 computed from the quantized length, never the raw one.
 
-The table is generated, not copied: the construction rule is verified
-against golden values lifted from the reference in tests.
+The table is generated, not copied. `tests/test_core.py` checks golden
+values lifted from the reference, and checks the full table against
+Lucene's `SmallFloat.byte4ToInt` and, where the reference source is
+present, against bm25.rs itself.
 """
 
 from __future__ import annotations

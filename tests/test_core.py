@@ -6,6 +6,7 @@ property tests."""
 from __future__ import annotations
 
 import math
+import os
 import re
 
 import numpy as np
@@ -31,6 +32,20 @@ from bm25spark.fieldnorm import (
 from bm25spark.scoring import Cache, idf, tf_score, wand_max
 
 
+def _byte4_to_int(b: int) -> int:
+    """Lucene's ``SmallFloat.byte4ToInt`` (org/apache/lucene/util/
+    SmallFloat.java): bytes below ``NUM_FREE_VALUES`` (24) are exact,
+    the rest decode ``b - 24`` as a 4-bit-mantissa float via
+    ``int4ToLong``. Yields the same 256 lengths as the reference's
+    ``FIELDNORM_TO_LENGTH``, by an unrelated construction."""
+    num_free_values = 24
+    if b < num_free_values:
+        return b
+    i = b - num_free_values
+    bits, shift = i & 7, (i >> 3) - 1
+    return num_free_values + (bits if shift == -1 else (bits | 8) << shift)
+
+
 class TestFieldnorm:
     def test_golden_values(self):
         # hand-copied from /root/reference/crates/bm25/src/bm25.rs:15-283
@@ -40,11 +55,20 @@ class TestFieldnorm:
             assert FIELDNORM_TO_LENGTH[i] == v
 
     def test_full_table_matches_reference_source(self):
-        src = open("/root/reference/crates/bm25/src/bm25.rs").read()
-        body = src[src.index("["): src.index("];")]
-        vals = [int(x.replace("_", "")) for x in re.findall(r"(\d[\d_]*),", body)]
-        assert len(vals) == 256
-        assert (np.array(vals) == FIELDNORM_TO_LENGTH).all()
+        # All 256 entries against Lucene's SmallFloat.byte4ToInt, written
+        # out above and sharing no code with fieldnorm._build_table.
+        expected = [_byte4_to_int(b) for b in range(256)]
+        assert len(FIELDNORM_TO_LENGTH) == 256
+        assert FIELDNORM_TO_LENGTH.tolist() == expected
+        # And against the reference table itself wherever its source is
+        # checked out.
+        bm25_rs = "/root/reference/crates/bm25/src/bm25.rs"
+        if os.path.exists(bm25_rs):
+            src = open(bm25_rs).read()
+            body = src[src.index("["): src.index("];")]
+            vals = [int(x.replace("_", "")) for x in re.findall(r"(\d[\d_]*),", body)]
+            assert len(vals) == 256
+            assert (np.array(vals) == FIELDNORM_TO_LENGTH).all()
 
     def test_round_down(self):
         assert length_to_fieldnorm(41) == 40  # rounds down to 40
