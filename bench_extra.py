@@ -13,7 +13,7 @@ Usage:
                                              # escalated sf without new data)
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (default 32), BM25SPARK_BENCH_REPEATS (default 3).
+SPARK_GRAFT_CPUS (default: the host's CPU count), BM25SPARK_BENCH_REPEATS (default 3).
 
 Each leg times the *computation* via a noop sink where the public API
 returns a DataFrame; legs that are driver-side kernels (wand) or
@@ -30,7 +30,7 @@ import time
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     repeats = max(1, int(os.environ.get("BM25SPARK_BENCH_REPEATS", "3")))
 
     args = [a for a in sys.argv[1:]]

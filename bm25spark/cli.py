@@ -18,16 +18,18 @@ from __future__ import annotations
 import argparse
 import json
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 
 def load_table(spark: SparkSession, source: str, fmt: str = "auto") -> DataFrame:
     """Read an input table: an Iceberg/catalog table name or a
-    parquet path. ``auto`` tries the catalog first, then parquet."""
+    parquet path. ``auto`` tries the catalog first, then parquet when
+    the catalog has no such table."""
     if fmt == "iceberg" or (fmt == "auto" and "/" not in source):
         try:
             return spark.read.table(source)
-        except Exception:
+        except AnalysisException:
             if fmt == "iceberg":
                 raise
     if fmt in ("auto", "parquet"):

@@ -28,9 +28,11 @@ maintain.rs:27-311):
   scanned where it lives, not on the driver.
 - ``vacuum``   compacts: drops tombstoned docs, relabels survivors to
   dense ids (the reference's relabel array, maintain.rs:330-362 — here
-  the J4 relabel *join*), tokenizes and appends delta docs, re-runs the
-  build's sort+flush stages, and atomically swaps the artifact dirs
-  (publish-last, like build.rs:60-70).
+  by arithmetic, ``old_id`` minus the tombstones below it, in one
+  narrow map over docs and staging), tokenizes and appends delta docs,
+  re-runs the build's sort+flush stages, and atomically swaps the
+  artifact dirs (publish-last, like build.rs:60-70). A vacuum that
+  fails removes its half-built generation.
 - ``maybe_vacuum`` is the auto-seal policy: vacuum once the live delta
   exceeds a row threshold — the analogue of the reference's
   ``bm25.segment_growing_max_page_size`` GUC (README.md:466: growing
@@ -44,6 +46,8 @@ import os
 import time
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
@@ -72,8 +76,6 @@ def _gen_of(meta: dict) -> int:
 
 
 def _read_gen(index_dir: str) -> int:
-    import json
-
     return _gen_of(json.loads(fsio.read_text(fsio.join(index_dir, "meta.json"))))
 
 
@@ -658,9 +660,6 @@ def gc_index(
     with a stale copy. The meta rewrite is assert_held-gated (with the
     caller's lock when invoked from a vacuum body). Returns True when
     something was reclaimed."""
-    import json as _json
-    import time as _time
-
     grace = (
         float(os.environ.get("BM25SPARK_VACUUM_GRACE_SEC", "0"))
         if grace_sec is None
@@ -689,16 +688,16 @@ def gc_index(
                 litter = _glob.glob(os.path.join(root, pat))
                 for f in litter:
                     try:
-                        if _time.time() - os.path.getmtime(f) > 60.0:
+                        if time.time() - os.path.getmtime(f) > 60.0:
                             os.unlink(f)
                     except OSError:
                         pass
         mp = fsio.join(index_dir, "meta.json")
-        meta = _json.loads(fsio.read_text(mp))
+        meta = json.loads(fsio.read_text(mp))
         entries = _retired_entries(meta)
         if not entries:
             return False
-        now = _time.time()
+        now = time.time()
         keep: dict[str, float] = {}
         reclaimed = False
         for rel, at in entries.items():
@@ -725,7 +724,7 @@ def gc_index(
             meta.pop("retired", None)
         if gate is not None:
             gate.assert_held()
-        fsio.write_text_atomic(mp, _json.dumps(meta, indent=2))
+        fsio.write_text_atomic(mp, json.dumps(meta, indent=2))
         return reclaimed
     finally:
         if lock is not None:
@@ -767,6 +766,33 @@ def vacuum(spark: SparkSession, index_dir: str, text_col: str) -> int:
         lock.__exit__(None, None, None)
 
 
+def _relabel_ids(ids: np.ndarray, tombs: np.ndarray) -> np.ndarray:
+    """J4 relabel against the sorted, distinct tombstone ids: the new id
+    of each survivor is its rank among the survivors, ``id − |{t in
+    tombs : t < id}|`` (the reference's relabel array,
+    maintain.rs:330-362); a tombstoned id maps to -1."""
+    below = np.searchsorted(tombs, ids)
+    dead = np.searchsorted(tombs, ids, side="right") != below
+    return np.where(dead, -1, ids - below)
+
+
+def _relabel(df: DataFrame, col: str, tombs: np.ndarray) -> DataFrame:
+    """:func:`_relabel_ids` over ``df``'s ``col``, dropping tombstoned
+    rows: a narrow map that ships only the id column to Python, with no
+    shuffle, pin or join. ``tombs`` rides in the UDF closure (PySpark
+    broadcasts a command over 1 MiB by itself)."""
+    if not len(tombs):
+        return df
+
+    @F.arrow_udf("long")
+    def relabel(ids: pa.Array) -> pa.Array:
+        return pa.array(_relabel_ids(ids.to_numpy(), tombs))
+
+    # nondeterministic, so the filter below cannot re-evaluate the UDF
+    new = relabel.asNondeterministic()(F.col(col))
+    return df.withColumn(col, new).filter(F.col(col) >= 0)
+
+
 def _vacuum_locked(
     spark: SparkSession,
     idx: Bm25Index,
@@ -785,46 +811,27 @@ def _vacuum_locked(
     fsio.rmtree(work)
     fsio.mkdirs(work)
 
-    # --- survivors of the sealed segment, relabeled densely (J4) ---
-    sealed = idx.docs_df()
-    tp = _tomb_path(index_dir, old_gen)
-    if fsio.exists(tp):
-        sealed = sealed.join(
-            spark.read.parquet(tp).distinct(), "doc_id", "left_anti"
-        )
-    sealed = sealed.withColumnRenamed("doc_id", "old_id")
     parts = max(spark.sparkContext.defaultParallelism, 8)
-    # the id-assignment checkpoints and the relabel cache are dropped on
-    # every exit, once the docs and staging writes no longer need them
+    # the delta id assignment's checkpoints are dropped on every exit
     pins: list[int] = []
-    relabeled = None
     try:
-        relabeled = _assign_doc_ids(
-            spark, sealed, ["old_id"], parts, pins, pin_output=True
-        )
-        relabeled.persist()
-        n_sealed = relabeled.count()
-
-        # sealed survivors: their staged rows (fieldnorm included),
-        # relabeled per document; the inner join drops tombstoned docs
-        relabel_map = relabeled.select(
-            F.col("old_id").alias("gid"), F.col("_iid").alias("new_gid")
-        )
-        new_maps = (
-            _read_doc_terms(spark, idx._path("mappings"))
-            .withColumn(
-                "gid",
-                F.col("shard").cast("long") * cfg.shard_size + F.col("local_id"),
-            )
-            .join(relabel_map, "gid")
-            .select("tkeys", "ttfs", F.col("new_gid").alias("gid"), "fieldnorm")
-        )
-        new_docs = relabeled.select(
-            F.col("_iid").alias("doc_id"),
-            "doc_len",
-            "fieldnorm",
-            "content_sha256",
+        # --- survivors of the sealed segment, relabeled densely (J4);
+        # the tombstones are O(deletes), read on the driver, no job ---
+        tp = _tomb_path(index_dir, old_gen)
+        tombs = np.array([], dtype=np.int64)
+        if fsio.exists(tp):
+            t = ds.dataset(tp, format="parquet").to_table(columns=["doc_id"])
+            tombs = np.unique(t["doc_id"].to_numpy())
+        n_sealed = idx.n_docs - len(tombs)
+        new_docs = _relabel(idx.docs_df().select(
+            "doc_id", "doc_len", "fieldnorm", "content_sha256",
             *[f"p_{c}" for c in pc],
+        ), "doc_id", tombs)
+        gid = F.col("shard").cast("long") * cfg.shard_size + F.col("local_id")
+        new_maps = _relabel(
+            _read_doc_terms(spark, idx._path("mappings"))
+            .select("tkeys", "ttfs", gid.alias("gid"), "fieldnorm"),
+            "gid", tombs,
         )
 
         # --- delta docs: tokenize, ids after the sealed block ---
@@ -835,27 +842,19 @@ def _vacuum_locked(
             # repeat, so every delta row gets its own deterministic doc_id
             dass = _assign_doc_ids(
                 spark, prep, [*pc, "_rowid"], parts, pins, pin_output=True
+            ).select(
+                (F.col("_iid") + F.lit(n_sealed)).alias("doc_id"),
+                F.col("doc_len").cast("long").alias("doc_len"),
+                _fieldnorm_expr().alias("fieldnorm"),
+                F.sha2(F.col(text_col), 256).alias("content_sha256"),
+                *[F.col(c).alias(f"p_{c}") for c in pc],
+                F.col("terms").getField("key").alias("tkeys"),
+                F.col("terms").getField("tf").alias("ttfs"),
             )
-            dass = dass.withColumn(
-                "_iid", F.col("_iid") + F.lit(n_sealed)
-            ).withColumn("fieldnorm", _fieldnorm_expr())
-            new_docs = new_docs.unionByName(
-                dass.select(
-                    F.col("_iid").alias("doc_id"),
-                    F.col("doc_len").cast("long").alias("doc_len"),
-                    "fieldnorm",
-                    F.sha2(F.col(text_col), 256).alias("content_sha256"),
-                    *[F.col(c).alias(f"p_{c}") for c in pc],
-                )
-            )
-            new_maps = new_maps.unionByName(
-                dass.select(
-                    F.col("terms").getField("key").alias("tkeys"),
-                    F.col("terms").getField("tf").alias("ttfs"),
-                    F.col("_iid").alias("gid"),
-                    "fieldnorm",
-                )
-            )
+            new_docs = new_docs.unionByName(dass.drop("tkeys", "ttfs"))
+            new_maps = new_maps.unionByName(dass.select(
+                "tkeys", "ttfs", F.col("doc_id").alias("gid"), "fieldnorm"
+            ))
 
         # --- new docs artifact + doc-grouped staging ---
         new_docs = new_docs.withColumn(
@@ -874,21 +873,20 @@ def _vacuum_locked(
         )
         staging.write.parquet(fsio.join(work, "mappings"))
         _ensure_readable_parquet(fsio.join(work, "mappings"), staging.schema)
+        finalize_index(spark, work, cfg, pc)
+    except BaseException:
+        # a failed vacuum leaves no partial generation behind; the live
+        # meta.json still points at the old one
+        fsio.rmtree(work)
+        raise
     finally:
-        if relabeled is not None:
-            relabeled.unpersist()
         _release_rdds(spark, pins)
 
-    finalize_index(spark, work, cfg, pc)
-
     # --- versioned publish (publish-last) ---
-    import json as _json
-    import time as _time
-
     gen_dir = fsio.join(index_dir, f"gen{gen}")
     fsio.rmtree(gen_dir)
     fsio.move_dir(work, gen_dir)  # local: atomic rename (same parent)
-    new_meta = _json.loads(fsio.read_text(fsio.join(gen_dir, "meta.json")))
+    new_meta = json.loads(fsio.read_text(fsio.join(gen_dir, "meta.json")))
     new_meta["generation"] = gen
     new_meta["paths"] = {
         k: f"gen{gen}/{v}" for k, v in new_meta["paths"].items()
@@ -901,11 +899,11 @@ def _vacuum_locked(
     # just-retired generation's window). The carry source is the
     # on-disk meta re-read AFTER the in-body gc above, not the stale
     # idx.meta snapshot — already-reclaimed ghosts must not reappear.
-    cur_meta = _json.loads(
+    cur_meta = json.loads(
         fsio.read_text(fsio.join(index_dir, "meta.json"))
     )
     entries = _retired_entries(cur_meta)
-    now = _time.time()
+    now = time.time()
     retiring = {p.split("/")[0] for p in idx.meta["paths"].values()}
     # the absorbed growing segment (mut_gen{old} — or the pre-layout
     # root dirs on a legacy gen-0 index) retires WITH its sealed
@@ -927,7 +925,7 @@ def _vacuum_locked(
     if lock is not None:
         lock.assert_held()
     fsio.write_text_atomic(
-        fsio.join(index_dir, "meta.json"), _json.dumps(new_meta, indent=2)
+        fsio.join(index_dir, "meta.json"), json.dumps(new_meta, indent=2)
     )
     return index_dir
 

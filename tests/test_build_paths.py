@@ -119,6 +119,52 @@ def test_build_and_vacuum_release_their_persists(spark, tmp_path, monkeypatch):
     assert persisted().size() == before
 
 
+def test_failed_vacuum_leaves_no_partial_artifacts(spark, tmp_path, monkeypatch):
+    """A vacuum whose block kernel raises (with sealed tombstones and
+    delta rows both to absorb) propagates the error and leaves the index
+    as it was: meta.json unchanged, no half-built ``gen{N}.build``, no
+    pinned RDDs and a free mutation lock. The next vacuum succeeds."""
+    from bm25spark.maintain import _MutationLock
+
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    df = spark.createDataFrame(
+        [(i, f"w{i % 7} w{i % 5} common") for i in range(300)],
+        "doc_id INT, text STRING",
+    )
+    d = str(tmp_path / "idx")
+    build_index(
+        spark, df.filter("doc_id < 250"), d, "text", ["doc_id"],
+        cfg=Bm25Config(shard_size=128),
+    )
+    insert(spark, d, df.filter("doc_id >= 250"), "text")
+    delete(spark, d, df.filter("doc_id % 9 = 0").select("doc_id"))
+    with open(os.path.join(d, "meta.json"), "rb") as f:
+        meta_before = f.read()
+    before = persisted().size()
+
+    def failing_kernel(cfg, avgdl, n_buckets):
+        def build(batches):
+            raise RuntimeError("injected vacuum block-kernel failure")
+
+        return build
+
+    monkeypatch.setattr(build_mod, "_build_blocks_docs_fn", failing_kernel)
+    with pytest.raises(Exception, match="injected vacuum block-kernel failure"):
+        vacuum(spark, d, "text")
+    with open(os.path.join(d, "meta.json"), "rb") as f:
+        assert f.read() == meta_before
+    gen = json.loads(meta_before).get("generation", 0) + 1
+    assert not os.path.exists(os.path.join(d, f"gen{gen}.build"))
+    assert persisted().size() == before
+    with _MutationLock(d, timeout=0.5):
+        pass
+
+    monkeypatch.undo()
+    assert vacuum(spark, d, "text") == gen
+    with open(os.path.join(d, "meta.json")) as f:
+        assert json.load(f)["n_docs"] == 300 - len(range(0, 300, 9))
+
+
 def test_empty_and_all_null_corpus_lifecycle(spark, tmp_path):
     """CREATE INDEX on an empty table works in the reference and must
     work here: an empty (or all-NULL-text) corpus builds a loadable

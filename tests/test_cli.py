@@ -271,6 +271,22 @@ def test_load_table_catalog_and_parquet(spark, corpus_path):
         load_table(spark, "no_such_table_xyz", "iceberg")
 
 
+def test_load_table_reraises_non_analysis_errors(spark, monkeypatch):
+    """Only a catalog miss (AnalysisException) falls back to a parquet
+    read; any other catalog error surfaces instead of being masked by
+    the parquet attempt."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from bm25spark.cli import load_table
+
+    def broken_table(self, name):
+        raise RuntimeError("catalog unavailable")
+
+    monkeypatch.setattr(DataFrameReader, "table", broken_table)
+    with pytest.raises(RuntimeError, match="catalog unavailable"):
+        load_table(spark, "some_table")
+
+
 def test_prepare_pipeline_cli_and_index_integration(spark, tmp_path, capsys):
     """The two halves of the repo compose: `prepare` cleans a corpus
     (dedup keeper + quality rules + decontamination + split), then the

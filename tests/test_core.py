@@ -717,3 +717,35 @@ class TestSessionDefaults:
         # a large host is capped at 16g
         conf["SC_PHYS_PAGES"] = (128 << 30) // 4096
         assert session._default_driver_mem() == f"{16 << 10}m"
+
+
+class TestRelabelProperty:
+    """Spark-free property test of vacuum's survivor relabel
+    (``maintain._relabel_ids``): over any batch of ids in any order,
+    each non-tombstoned id maps to its rank among all survivors,
+    computed here by enumeration, and each tombstoned id to -1."""
+
+    @settings(max_examples=300, deadline=None)
+    @given(st.data())
+    def test_kept_ids_and_ranks(self, data):
+        from bm25spark.maintain import _relabel_ids
+
+        n = data.draw(st.integers(1, 200), label="n_docs")
+        ids_ = st.integers(0, n - 1)
+        tombs = data.draw(
+            st.one_of(
+                st.just([]),
+                st.just(list(range(n))),
+                st.lists(ids_, max_size=n).map(lambda t: [0, n - 1, 0, n - 1] + t),
+                st.lists(ids_, min_size=1, max_size=2 * n).map(lambda t: t + t),
+            ),
+            label="tombstones",
+        )
+        batch = data.draw(st.permutations(range(n)), label="batch")
+        batch = np.array(batch[: data.draw(st.integers(0, n))], dtype=np.int64)
+
+        dead = set(tombs)
+        survivors = [i for i in range(n) if i not in dead]
+        rank = {old: new for new, old in enumerate(survivors)}
+        new = _relabel_ids(batch, np.unique(np.array(tombs, dtype=np.int64)))
+        assert new.tolist() == [rank.get(int(i), -1) for i in batch]
