@@ -1,5 +1,8 @@
 """Direct (Spark-free) Arrow access to index artifacts.
 
+:func:`spark_schema` also serves the Spark reads: it reads the schema
+Spark stored in a footer, so a Spark open needs no inference job.
+
 The driver-side query path reads the terms dictionary, posting blocks
 and fieldnorms straight through pyarrow datasets — no Spark job per
 query. Filters push down to parquet (directory pruning on the hive
@@ -11,9 +14,63 @@ same functions (artifacts live on shared storage).
 
 from __future__ import annotations
 
+import json
+
 import numpy as np
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
+import pyarrow.parquet as pq
+from pyarrow import fs as pafs
+
+from . import fs as fsio
+
+#: the footer key under which Spark's Parquet writer stores the row
+#: schema — the StructType JSON that Spark's own inference returns
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _as_nullable(t):
+    """Spark's ``asNullable`` over StructType JSON: a file relation
+    reads every column and element as nullable, whatever the writer
+    declared."""
+    if isinstance(t, list):
+        return [_as_nullable(x) for x in t]
+    if not isinstance(t, dict):
+        return t
+    return {
+        k: True if k in ("nullable", "containsNull", "valueContainsNull")
+        else v if k == "metadata" else _as_nullable(v)
+        for k, v in t.items()
+    }
+
+
+def spark_schema(path: str):
+    """The StructType ``spark.read.parquet(path)`` infers for the flat
+    directory ``path``, read without a Spark job: the row schema
+    Spark's writer stored in the footer of one data file. None when
+    there is no data file or the file lacks the key (Parquet written
+    by another tool)."""
+    fs, p = fsio.resolve(path)
+    try:
+        infos = fs.get_file_info(pafs.FileSelector(p))
+    except (FileNotFoundError, OSError):
+        return None
+    # Spark's listing skips names starting with "_" or "." (_SUCCESS,
+    # checksums)
+    files = sorted(
+        i.path for i in infos
+        if i.type == pafs.FileType.File and not i.base_name.startswith(("_", "."))
+    )
+    if not files:
+        return None
+    raw = (pq.read_schema(files[0], filesystem=fs).metadata or {}).get(
+        SPARK_SCHEMA_KEY
+    )
+    if raw is None:
+        return None
+    from pyspark.sql.types import StructType
+
+    return StructType.fromJson(_as_nullable(json.loads(raw)))
 
 
 def read_terms(terms_path: str, keys: list[bytes], buckets: list[int],

@@ -152,7 +152,7 @@ def main(argv: list[str] | None = None) -> None:
             )
 
     sb = sub.add_parser(
-        "search-batch", help="M queries in one Spark job (one per line)"
+        "search-batch", help="M queries in one batch of Spark jobs (one per line)"
     )
     sb.add_argument("--index-dir", required=True)
     sb.add_argument(

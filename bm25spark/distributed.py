@@ -4,10 +4,13 @@ The scale form of the query path (SURVEY.md §2.7 Q1 "distributed
 form"): term statistics broadcast from the driver (they are global —
 idf/avgdl must not vary per task), posting blocks of the query terms
 grouped by shard, the vectorized taat kernel run inside each task over
-its shard's blocks + fieldnorm slice, per-shard top-k unioned and cut
-to the global top-k per query by a window. Per-shard thresholds start
-at 0 so the union provably contains the global top-k. A single query
-is a batch of one.
+its shard's blocks + fieldnorm slice, per-shard top-k unioned, cut
+per query by a window (so the payload join broadcasts M*k rows
+whatever the shard count) and ordered in one task. Per-shard
+thresholds start at 0 so the union provably contains the global
+top-k. A single query is a batch of one. Only the query terms' bucket
+directories are opened, under a named schema: no listing or
+schema-inference job runs.
 
 Work per task is bounded by shard_size regardless of term skew — the
 same property the build's (term, shard) grouping gives — so a 1000-
@@ -19,7 +22,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .index import Bm25Index
@@ -169,7 +172,8 @@ def search_distributed_batch(
     blocked: DataFrame | None = None,
     prune_min_bytes: int | None = None,
 ) -> DataFrame:
-    """Distributed top-k: M queries answered by ONE Spark job — the
+    """Distributed top-k: M queries answered by one fixed set of Spark
+    jobs, whatever M (5: AQE runs each exchange stage as a job) — the
     one sealed-segment serving path (:func:`search_distributed` is a
     batch of one).
 
@@ -226,15 +230,29 @@ def _analyze_batch(
     return {qid: keys for qid, keys in qterms.items() if keys}, stats
 
 
-def _ordered_by_query(df: DataFrame, payload_cols: list[str]) -> DataFrame:
-    """Order a (query_id, payload cols..., score) result of at most
-    M*k rows by (query_id, score desc, payload cols) in ONE task: a
-    global ``orderBy`` would first run a range-partition sampling job
-    over these few rows. ``repartition`` (not ``coalesce``) keeps the
-    upstream docs scan of the payload join parallel."""
-    return df.repartition(1).sortWithinPartitions(
-        "query_id", F.desc("score"), *payload_cols
-    )
+def _top_per_query(df: DataFrame, k: int, *order) -> DataFrame:
+    """Each query's first ``k`` rows by ``order``."""
+    w = Window.partitionBy("query_id").orderBy(*order)
+    return df.withColumn("_rn", F.row_number().over(w)).filter(
+        F.col("_rn") <= k
+    ).drop("_rn")
+
+
+def _ordered_by_query(
+    df: DataFrame, payload_cols: list[str], k: int | None = None
+) -> DataFrame:
+    """Order a (query_id, payload cols..., score) result of a few M*k
+    rows by (query_id, score desc, payload cols) in ONE task: a global
+    ``orderBy`` would first run a range-partition sampling job over
+    these few rows. ``repartition`` (not ``coalesce``) keeps the
+    upstream docs scan of the payload join parallel. With ``k``, each
+    query is first cut to its k best in that same task: a window over
+    one partition adds no exchange."""
+    order = [F.desc("score"), *payload_cols]
+    df = df.repartition(1)
+    if k is not None:
+        df = _top_per_query(df, k, *order)
+    return df.sortWithinPartitions("query_id", *order)
 
 
 def _sealed_topk_df(
@@ -249,9 +267,6 @@ def _sealed_topk_df(
 ) -> DataFrame:
     """:func:`search_distributed_batch` before the final ordering, over
     an :func:`_analyze_batch` result."""
-    from pyspark.sql import Window
-
-    spark = idx.spark
     out_cols = "query_id STRING, doc_id BIGINT, score DOUBLE"
     if not qterms:
         return idx.empty_df(with_query_id=True)
@@ -270,25 +285,9 @@ def _sealed_topk_df(
     # smaller doc_id) must survive the shard cut, so fetch k+slack per
     # shard exactly like Bm25Index.search_df does
     k_fetch = k + (128 if round_score is not None else 0)
-    binfo = spark.sparkContext.broadcast(
-        (
-            term_info,
-            {qid: list(keys) for qid, keys in qterms.items()},
-            n_docs,
-            avgdl,
-            k1,
-            b,
-            shard_size,
-            docs_path,
-            k_fetch,
-            PRUNE_MIN_BYTES if prune_min_bytes is None else prune_min_bytes,
-        )
-    )
-
-    buckets = idx._buckets(present)
+    prune_gate = PRUNE_MIN_BYTES if prune_min_bytes is None else prune_min_bytes
     blocks = (
-        idx.postings_df()
-        .filter(F.col("bucket").isin(buckets))
+        idx.postings_df(idx._buckets(present))
         .filter(F.col("term_key").isin([bytearray(x) for x in present]))
         .select(
             "term_key", "shard", "block_ord", "min_doc", "max_doc", "count",
@@ -300,9 +299,10 @@ def _sealed_topk_df(
         idx, prefilter, blocked, shard_size
     )
 
+    # the task's inputs ride in its closure, not an explicit broadcast
+    # that would outlive the call (PySpark broadcasts a command over
+    # 1 MiB by itself)
     def run_shard_batch(key, pdf, allowed_pdf=None):
-        (term_info, qterms, n_docs, avgdl, k1, b, shard_size, docs_path, k,
-         prune_gate) = binfo.value
         shard = int(key[0])
         base = shard * shard_size
         fns = _shard_fieldnorms(docs_path, shard, shard_size)
@@ -329,13 +329,13 @@ def _sealed_topk_df(
         # prune_blocks_batch; results stay bit-identical)
         if sum(_bytes_of(t) for t in tps.values()) >= prune_gate:
             tps, _ = prune_blocks_batch(
-                tps, qterms, fns, k, allowed_mask=allowed_mask
+                tps, qterms, fns, k_fetch, allowed_mask=allowed_mask
             )
         else:
             for tp in tps.values():
                 tp.decoded = tp.decode_all()  # decode ONCE, reuse per query
         out = pd.DataFrame(
-            taat_topk_batch(tps, qterms, fns, k, allowed_mask=allowed_mask),
+            taat_topk_batch(tps, qterms, fns, k_fetch, allowed_mask=allowed_mask),
             columns=["query_id", "doc_id", "score"],
         )
         out["doc_id"] += base
@@ -364,14 +364,9 @@ def _sealed_topk_df(
         if round_score is not None
         else F.col("score")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    topk = (
-        per_shard.select("query_id", "doc_id", score_col.alias("score"))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
+    topk = _top_per_query(
+        per_shard.select("query_id", "doc_id", score_col.alias("score")),
+        k, F.desc("score"), F.asc("doc_id"),
     )
     # J3: payload join on the dense id (internal id aliased so a
     # payload column may itself be named doc_id)

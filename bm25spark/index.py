@@ -15,15 +15,24 @@ from __future__ import annotations
 import json
 import os
 import numpy as np
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from . import artifacts
 from . import fs as fsio
 from .analyze import analyze_query, check_analyzer_fingerprint, get_analyzer
-from .build import term_bucket
+from .build import POSTINGS_SCHEMA, term_bucket
 from .scoring import Cache
 from .wand import TermPostings, bmw_topk, taat_topk
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Open a flat Parquet directory with no schema-inference job, under
+    the schema in its footer (:func:`artifacts.spark_schema`)."""
+    schema = artifacts.spark_schema(path)
+    return (spark.read.schema(schema) if schema else spark.read).parquet(path)
 
 
 class Bm25Index:
@@ -89,24 +98,28 @@ class Bm25Index:
     # ---- artifact access -------------------------------------------------
 
     def docs_df(self) -> DataFrame:
-        return self.spark.read.parquet(self._path("docs"))
+        return read_parquet(self.spark, self._path("docs"))
 
-    def postings_df(self) -> DataFrame:
-        return self.spark.read.parquet(self._path("postings"))
+    def postings_df(self, buckets: list[int] | None = None) -> DataFrame:
+        """The postings relation; with ``buckets``, a scan of only those
+        ``bucket=N`` directories, which Spark lists on the driver (no
+        job up to 32 paths). Each must exist: every indexed key's
+        bucket has blocks."""
+        root = self._path("postings")
+        reader = self.spark.read.schema(POSTINGS_SCHEMA).option("basePath", root)
+        if buckets is None:
+            return reader.parquet(root)
+        return reader.parquet(*[fsio.join(root, f"bucket={b}") for b in buckets])
 
     def terms_df(self) -> DataFrame:
-        return self.spark.read.parquet(self._path("terms"))
+        return read_parquet(self.spark, self._path("terms"))
 
     def lineage_df(self) -> DataFrame:
-        return self.spark.read.parquet(self._path("lineage"))
+        return read_parquet(self.spark, self._path("lineage"))
 
     def result_schema(self, with_query_id: bool = False):
         """``([query_id,] payload cols..., score)`` — the schema of every
         search result frame."""
-        from pyspark.sql.types import (
-            DoubleType, StringType, StructField, StructType,
-        )
-
         payload = self.docs_df().select(
             *[F.col(f"p_{c}").alias(c) for c in self.payload_cols]
         ).schema.fields
@@ -136,13 +149,9 @@ class Bm25Index:
             return {}
         missing = [k for k in keys if k not in self._term_cache]
         if missing:
-            if self._terms_ds is None:
-                import pyarrow.dataset as ds
-
-                self._terms_ds = ds.dataset(self._path("terms"), format="parquet")
             found = artifacts.read_terms(
                 self._path("terms"), missing, self._buckets(missing),
-                dataset=self._terms_ds,
+                dataset=self._terms_dataset(),
             )
             for k in missing:
                 self._term_cache[k] = found.get(k)
@@ -161,15 +170,9 @@ class Bm25Index:
         out = {k: self._postings_cache[k] for k in keys if k in self._postings_cache}
         missing = [k for k in keys if k not in out]
         if missing:
-            if self._postings_ds is None:
-                import pyarrow.dataset as ds
-
-                self._postings_ds = ds.dataset(
-                    self._path("postings"), format="parquet", partitioning="hive"
-                )
             found = artifacts.read_postings(
                 self._path("postings"), missing, self._buckets(missing),
-                self.shard_size, dataset=self._postings_ds,
+                self.shard_size, dataset=self._postings_dataset(),
             )
             for k, p in found.items():
                 size = sum(len(b) for b in p["ids_bytes"]) + sum(
@@ -180,6 +183,18 @@ class Bm25Index:
                     self._cache_bytes += size
                 out[k] = p
         return out
+
+    def _terms_dataset(self) -> pads.Dataset:
+        if self._terms_ds is None:
+            self._terms_ds = pads.dataset(self._path("terms"), format="parquet")
+        return self._terms_ds
+
+    def _postings_dataset(self) -> pads.Dataset:
+        if self._postings_ds is None:
+            self._postings_ds = pads.dataset(
+                self._path("postings"), format="parquet", partitioning="hive"
+            )
+        return self._postings_ds
 
     def _cache_admit(self, size: int) -> bool:
         """Admission control shared by the raw-postings and
@@ -220,15 +235,9 @@ class Bm25Index:
         more than ``postings_cache_limit`` bytes resets the pool, so
         warm the hot set, not the dictionary. Returns
         {"terms_warmed", "cache_bytes"}."""
-        import pyarrow.dataset as ds
-
         self.fieldnorms()
-        if self._terms_ds is None:
-            self._terms_ds = ds.dataset(self._path("terms"), format="parquet")
-        if self._postings_ds is None:
-            self._postings_ds = ds.dataset(
-                self._path("postings"), format="parquet", partitioning="hive"
-            )
+        self._terms_dataset()
+        self._postings_dataset()
         n = 0
         for q in queries or ():
             n += len(self.term_postings(q))
@@ -350,25 +359,17 @@ class Bm25Index:
         hits = hits[:k]
         if not hits:
             return self.empty_df()
-        ids = [d for d, _ in hits]
-        scores = {d: s for d, s in hits}
+        scores = {d: float(s) for d, s in hits}
         pay = (
             self.docs_df()
-            .filter(F.col("doc_id").isin(ids))
+            .filter(F.col("doc_id").isin(list(scores)))
             .select("doc_id", *[f"p_{c}" for c in self.payload_cols])
             .collect()
         )
-        data = []
-        for r in pay:
-            row = {c: r[f"p_{c}"] for c in self.payload_cols}
-            row["_internal"] = r.doc_id
-            row["score"] = float(scores[r.doc_id])
-            data.append(row)
-        data.sort(key=lambda r: (-r["score"], r["_internal"]))
-        pdf_rows = [
-            tuple(r[c] for c in self.payload_cols) + (r["score"],) for r in data
-        ]
-        out = self.spark.createDataFrame(pdf_rows, self.result_schema())
+        pay.sort(key=lambda r: (-scores[r.doc_id], r.doc_id))
+        out = self.spark.createDataFrame(
+            [(*r[1:], scores[r.doc_id]) for r in pay], self.result_schema()
+        )
         if negate:
             out = out.withColumn("score", -F.col("score"))
         return out

@@ -62,7 +62,7 @@ from .build import (
     finalize_index,
 )
 from .config import Bm25Config
-from .index import Bm25Index
+from .index import Bm25Index, read_parquet
 from .udfs import with_doc_terms
 
 #: auto-seal threshold (live delta rows) used when none is given —
@@ -520,7 +520,7 @@ def _tombstones_df(
     path = _tomb_path(index_dir, _read_gen(index_dir) if gen is None else gen)
     if not fsio.exists(path):
         return None
-    return spark.read.parquet(path).select("doc_id").distinct()
+    return read_parquet(spark, path).select("doc_id").distinct()
 
 
 def _live_delta(spark: SparkSession, idx: Bm25Index, index_dir: str) -> DataFrame | None:
@@ -531,11 +531,11 @@ def _live_delta(spark: SparkSession, idx: Bm25Index, index_dir: str) -> DataFram
     path = _delta_path(index_dir, gen)
     if not fsio.exists(path):
         return None
-    delta = spark.read.parquet(path)
+    delta = read_parquet(spark, path)
     dt = _delta_tomb_path(index_dir, gen)
     if fsio.exists(dt):
         tombs = (
-            spark.read.parquet(dt)
+            read_parquet(spark, dt)
             .groupBy(idx.payload_cols)
             .agg(F.max("_seq").alias("_tomb_seq"))
         )
@@ -1051,8 +1051,6 @@ def search_with_delta_batch_df(
 
     Returns (query_id, payload cols..., score), ordered by
     (query_id, score desc, payload cols)."""
-    from pyspark.sql import Window
-
     from .distributed import _analyze_batch, _ordered_by_query, _sealed_topk_df
 
     idx = Bm25Index(spark, index_dir)
@@ -1091,11 +1089,6 @@ def search_with_delta_batch_df(
         if round_score is not None
         else F.col("score")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), *pc)
     return _ordered_by_query(
-        merged.select("query_id", *pc, score_col.alias("score"))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn"),
-        pc,
+        merged.select("query_id", *pc, score_col.alias("score")), pc, k=k
     )

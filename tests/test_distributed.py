@@ -254,3 +254,47 @@ def test_absent_term_results_keep_payload_schema(spark, tmp_path):
     for name, out in frames.items():
         assert out.columns == want, (name, out.columns)
         assert out.collect() == [], name
+
+
+def _temp_files(spark) -> int:
+    import os
+
+    return len(os.listdir(spark.sparkContext._temp_dir))
+
+
+def test_batch_searches_leave_no_broadcast_files(spark, dist_index):
+    """The shard task's inputs travel in its closure: searches leave no
+    broadcast pickle behind in the driver's temp dir."""
+    from bm25spark.distributed import search_distributed_batch
+
+    d, _ = dist_index
+    search_distributed_batch(spark, d, {"a": "t1"}, 5).collect()  # warm
+    before = _temp_files(spark)
+    for i in range(5):
+        search_distributed_batch(spark, d, {"a": f"t{i}", "b": "t9 t10"}, 5).collect()
+    assert _temp_files(spark) == before
+
+
+def test_failed_shard_task_leaves_session_clean(spark, dist_index, monkeypatch):
+    """A shard task that raises fails the search loudly and leaves no
+    pinned RDD or broadcast file; the next search on the same session
+    answers as before."""
+    from bm25spark import distributed
+
+    d, _ = dist_index
+    qs = {"a": "t1 t22 t333", "b": "t0"}
+    expected = distributed.search_distributed_batch(spark, d, qs, 10).collect()
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    rdds, files = persisted().size(), _temp_files(spark)
+
+    def failing_kernel(*args, **kwargs):  # nested: pickled by value
+        raise RuntimeError("injected shard-task failure")
+
+    monkeypatch.setattr(distributed, "taat_topk_batch", failing_kernel)
+    with pytest.raises(Exception, match="injected shard-task failure"):
+        distributed.search_distributed_batch(spark, d, qs, 10).collect()
+    assert persisted().size() == rdds
+    assert _temp_files(spark) == files
+
+    monkeypatch.undo()
+    assert distributed.search_distributed_batch(spark, d, qs, 10).collect() == expected

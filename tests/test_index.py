@@ -737,3 +737,72 @@ class TestWarmApi:
         stats = b2.warm()
         assert stats == {"terms_warmed": 0, "cache_bytes": 0}
         assert b2._fieldnorms is not None
+
+
+def test_footer_schema_equals_spark_inference(spark, tmp_path):
+    """``artifacts.spark_schema`` returns exactly the schema Spark
+    infers for every flat artifact (payload with a timestamp and a
+    decimal included), Parquet without Spark's footer key falls back to
+    inference, and a bucket-directory postings scan returns the rows of
+    the filtered whole relation."""
+    import datetime
+    import decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bm25spark import maintain
+    from bm25spark.artifacts import spark_schema
+    from bm25spark.index import read_parquet
+
+    rows = [
+        (
+            i,
+            datetime.datetime(2024, 1, 1 + i % 28, 12, i % 60),
+            decimal.Decimal(f"{i}.25"),
+            f"w{i % 7} w{i % 5} common",
+        )
+        for i in range(60)
+    ]
+    df = spark.createDataFrame(
+        rows, "doc_id INT, ts TIMESTAMP, amount DECIMAL(12,2), text STRING"
+    )
+    d = str(tmp_path / "idx")
+    build_index(
+        spark, df.filter("doc_id < 50"), d, "text", ["doc_id"],
+        payload_cols=["doc_id", "ts", "amount"], cfg=Bm25Config(shard_size=128),
+    )
+    maintain.insert(spark, d, df.filter("doc_id >= 50"), "text")
+    maintain.delete(
+        spark, d, df.filter("doc_id % 9 = 0").select("doc_id", "ts", "amount")
+    )
+    idx = Bm25Index(spark, d)
+    gen = maintain._gen_of(idx.meta)
+    paths = [idx._path(n) for n in ("docs", "terms", "lineage")] + [
+        maintain._delta_path(d, gen),
+        maintain._tomb_path(d, gen),
+        maintain._delta_tomb_path(d, gen),
+    ]
+    for p in paths:
+        inferred = spark.read.parquet(p).schema
+        assert spark_schema(p) == inferred, p
+        assert read_parquet(spark, p).schema == inferred, p
+    assert {"ts", "amount"} <= set(idx.result_schema().fieldNames())
+
+    foreign = str(tmp_path / "foreign")
+    (tmp_path / "foreign").mkdir()
+    pq.write_table(
+        pa.table({"a": [1, 2], "b": ["x", None]}), f"{foreign}/part-0.parquet"
+    )
+    assert spark_schema(foreign) is None
+    got = read_parquet(spark, foreign)
+    assert got.schema == spark.read.parquet(foreign).schema
+    assert sorted(got.collect()) == sorted(spark.read.parquet(foreign).collect())
+
+    keys = idx.query_keys("w1 w3 common")
+    buckets = idx._buckets(keys)
+    whole = idx.postings_df().filter(F.col("bucket").isin(buckets))
+    part = idx.postings_df(buckets)
+    assert part.schema == idx.postings_df().schema
+    assert whole.count() > 0
+    assert sorted(part.collect()) == sorted(whole.collect())

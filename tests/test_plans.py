@@ -126,3 +126,75 @@ def test_substring_spans_shuffle_carries_hash_not_gram(spark, docs):
         keys = m.group(1)
         assert "substring" not in keys and "gram" not in keys, keys
     dedup.release_caches()
+
+
+# ---- job budgets ------------------------------------------------------------
+# Jobs per serving call at SF: a sealed batch runs the shard-task stage,
+# the broadcast build, the docs scan of the payload join and the final
+# one-task ordering as AQE jobs; an added partition-discovery or
+# schema-inference job (an artifact opened by ``spark.read.parquet``
+# inference) or an added exchange breaks the budget. Counts, not times.
+SEALED_BATCH_JOBS = 5
+DELTA_SEALED_JOBS = 5
+DELTA_GROWING_JOBS = 9
+BUDGET_QUERIES = {"a": "merge spark", "b": "window", "c": "spark join plan"}
+
+
+def jobs_of(spark, tag: str, run) -> int:
+    """Spark jobs that ``run()`` starts on this thread."""
+    sc = spark.sparkContext
+    sc.setJobGroup(tag, tag)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(tag))
+
+
+@pytest.fixture(scope="module")
+def budget_index(spark, tmp_path_factory):
+    """A private sealed index over SF (the memoized one may carry a
+    growing segment from another test)."""
+    from bm25spark.api import index_for_parquet
+
+    base = str(tmp_path_factory.mktemp("budget"))
+    return index_for_parquet(
+        spark, f"{SF}/documents.parquet", "text", ["doc_id"], base_dir=base
+    ).index_dir
+
+
+def test_sealed_batch_search_job_budget(spark, budget_index):
+    from bm25spark.distributed import search_distributed_batch
+
+    for i in range(2):  # the first call of a session runs no extra job
+        n = jobs_of(
+            spark, f"budget-sealed-{i}",
+            lambda: search_distributed_batch(
+                spark, budget_index, BUDGET_QUERIES, 5
+            ).collect(),
+        )
+        assert n <= SEALED_BATCH_JOBS, n
+
+
+def test_delta_batch_search_job_budgets(spark, budget_index, tmp_path):
+    import shutil
+
+    from bm25spark.maintain import delete, insert, search_with_delta_batch_df
+
+    d = str(tmp_path / "idx")
+    shutil.copytree(budget_index, d)
+
+    def search():
+        search_with_delta_batch_df(spark, d, BUDGET_QUERIES, 5, "text").collect()
+
+    n = jobs_of(spark, "budget-delta-sealed", search)
+    assert n <= DELTA_SEALED_JOBS, n
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    insert(
+        spark, d,
+        docs.limit(20).select((F.col("doc_id") + 100000).alias("doc_id"), "text"),
+        "text",
+    )
+    delete(spark, d, docs.limit(5).select("doc_id"))
+    n = jobs_of(spark, "budget-delta-growing", search)
+    assert n <= DELTA_GROWING_JOBS, n
