@@ -1,7 +1,8 @@
 """Direct (Spark-free) Arrow access to index artifacts.
 
-:func:`spark_schema` also serves the Spark reads: it reads the schema
-Spark stored in a footer, so a Spark open needs no inference job.
+:func:`spark_schema` also serves the Spark reads (:func:`read_parquet`):
+it reads the schema Spark stored in a footer, so a Spark open needs no
+inference job.
 
 The driver-side query path reads the terms dictionary, posting blocks
 and fieldnorms straight through pyarrow datasets — no Spark job per
@@ -73,6 +74,15 @@ def spark_schema(path: str):
     return StructType.fromJson(_as_nullable(json.loads(raw)))
 
 
+def read_parquet(spark, path: str):
+    """Open a flat Parquet directory as a Spark DataFrame with no
+    schema-inference job, under the schema in its footer
+    (:func:`spark_schema`); Parquet without that key falls back to
+    inference."""
+    schema = spark_schema(path)
+    return (spark.read.schema(schema) if schema else spark.read).parquet(path)
+
+
 def read_terms(terms_path: str, keys: list[bytes], buckets: list[int],
                dataset=None):
     """-> {term_key: {df, wand_fn, wand_tf}} for the query's keys.
@@ -117,23 +127,33 @@ def read_postings(
         else ds.dataset(postings_path, format="parquet", partitioning="hive")
     )
     flt = pc.field("bucket").isin(buckets) & pc.field("term_key").isin(keys)
-    t = d.to_table(columns=_POSTING_COLS, filter=flt).sort_by(
+    return postings_by_key(d.to_table(columns=_POSTING_COLS, filter=flt), shard_size)
+
+
+def postings_by_key(t, shard_size: int, base: int = 0) -> dict[bytes, dict]:
+    """Posting-block rows ``t`` (a pyarrow Table with the
+    ``_POSTING_COLS``) grouped per term key: {term_key: block arrays in
+    ascending (shard, block_ord)}, the keyword arguments of a
+    ``TermPostings`` besides its term statistics. Doc ids (``min_doc``,
+    ``max_doc``, ``shard_base``) are shifted down by ``base``: a shard
+    task passes its shard's first id to score in shard-local ids."""
+    t = t.sort_by(
         [("term_key", "ascending"), ("shard", "ascending"), ("block_ord", "ascending")]
     )
     tk = t["term_key"].to_pylist()
-    shard = np.asarray(t["shard"])
-    out: dict[bytes, dict] = {}
     cols = {
-        "min_doc": np.asarray(t["min_doc"]),
-        "max_doc": np.asarray(t["max_doc"]),
+        "min_doc": np.asarray(t["min_doc"]) - base,
+        "max_doc": np.asarray(t["max_doc"]) - base,
         "count": np.asarray(t["count"]),
         "block_fn": np.asarray(t["wand_fn"]),
         "block_tf": np.asarray(t["wand_tf"]),
+        "shard_base": np.asarray(t["shard"]).astype(np.int64) * shard_size - base,
     }
     ids_meta = t["ids_meta"].to_pylist()
     ids_bytes = t["ids_bytes"].to_pylist()
     tfs_meta = t["tfs_meta"].to_pylist()
     tfs_bytes = t["tfs_bytes"].to_pylist()
+    out: dict[bytes, dict] = {}
     i = 0
     n = len(tk)
     while i < n:
@@ -147,7 +167,6 @@ def read_postings(
             "ids_bytes": ids_bytes[i:j],
             "tfs_meta": tfs_meta[i:j],
             "tfs_bytes": tfs_bytes[i:j],
-            "shard_base": shard[i:j].astype(np.int64) * shard_size,
         }
         i = j
     return out

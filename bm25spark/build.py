@@ -66,6 +66,7 @@ from pyspark.sql.types import (
 from . import fs as fsio
 from . import packing
 from .analyze import analyzer_fingerprint as _analyzer_fingerprint
+from .artifacts import read_parquet
 from .config import BLOCK_SIZE, FORMAT_MAGIC, FORMAT_VERSION, Bm25Config
 from .scoring import tf_score
 from .udfs import with_doc_terms
@@ -437,7 +438,7 @@ def _read_doc_terms(spark: SparkSession, path: str) -> DataFrame:
     here at read time. One struct list keeps each document's keys and
     tfs aligned; their order within a document is free (the kernel
     sorts its postings itself)."""
-    maps = spark.read.parquet(path)
+    maps = read_parquet(spark, path)
     if "tkeys" in maps.columns:
         return maps
     return (
@@ -454,7 +455,6 @@ def _read_doc_terms(spark: SparkSession, path: str) -> DataFrame:
 
 
 def _write_postings(
-    spark: SparkSession,
     doc_terms: DataFrame,
     postings_path: str,
     cfg: Bm25Config,
@@ -462,9 +462,11 @@ def _write_postings(
 ) -> None:
     """Stage 3: shuffle the doc-grouped rows on shard (a shard holds
     complete (term, shard) groups), build blocks per task, then cluster
-    the blocks by term bucket for the directory-partitioned write."""
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    blocks = doc_terms.repartition(n_part, "shard").mapInArrow(
+    the blocks by term bucket for the directory-partitioned write. The
+    shard exchange names no partition count, so AQE coalesces it to the
+    data: an explicit count would run a Python task per partition, most
+    of them empty when shards are few."""
+    blocks = doc_terms.repartition("shard").mapInArrow(
         _build_blocks_docs_fn(cfg, avgdl, cfg.term_buckets),
         POSTINGS_SCHEMA,
     )
@@ -617,7 +619,7 @@ def build_index(
                 pool.submit(_write_docs),
                 pool.submit(_write_mappings),
                 pool.submit(
-                    _write_postings, spark, doc_terms,
+                    _write_postings, doc_terms,
                     fsio.join(index_dir, "postings"), cfg, avgdl,
                 ),
             ]
@@ -662,7 +664,7 @@ def finalize_index(
     # the initial build passes them in (observed during the docs
     # write — zero extra jobs); resume/vacuum recompute from the
     # written artifact
-    docs_art = spark.read.parquet(docs_path)
+    docs_art = read_parquet(spark, docs_path)
     if stats is not None:
         n_docs, sum_dl = stats
     else:
@@ -676,14 +678,16 @@ def finalize_index(
     # ---- stage 3: postings ----------------------------------------------
     if not (resume and _stage_done(postings_path)):
         _write_postings(
-            spark, _read_doc_terms(spark, maps_path), postings_path, cfg, avgdl
+            _read_doc_terms(spark, maps_path), postings_path, cfg, avgdl
         )
 
     # ---- stages 4 + lineage: three independent jobs over the written
     # postings artifact, submitted from threads so the scheduler
     # overlaps them (each is small; serializing them just stacks their
     # fixed per-job latency) -------------------------------------------
-    postings = spark.read.parquet(postings_path)
+    # named schema: no inference job; Spark still lists the bucket
+    # directories (a listing job above its 32-path driver threshold)
+    postings = spark.read.schema(POSTINGS_SCHEMA).parquet(postings_path)
 
     def _write_terms():
         terms = postings.groupBy("term_key").agg(

@@ -4,13 +4,14 @@ The scale form of the query path (SURVEY.md §2.7 Q1 "distributed
 form"): term statistics broadcast from the driver (they are global —
 idf/avgdl must not vary per task), posting blocks of the query terms
 grouped by shard, the vectorized taat kernel run inside each task over
-its shard's blocks + fieldnorm slice, per-shard top-k unioned, cut
-per query by a window (so the payload join broadcasts M*k rows
-whatever the shard count) and ordered in one task. Per-shard
-thresholds start at 0 so the union provably contains the global
-top-k. A single query is a batch of one. Only the query terms' bucket
-directories are opened, under a named schema: no listing or
-schema-inference job runs.
+its shard's blocks + fieldnorm slice. The same task labels each query's
+shard top-k with its payload columns (J3, address_documents.rs) from
+the docs rows it reads for the fieldnorms, and returns finished rows as
+Arrow; the union is cut per query and ordered in one task, so the docs
+artifact is never scanned or joined by Spark. Per-shard thresholds
+start at 0 so the union provably contains the global top-k. A single
+query is a batch of one. Only the query terms' bucket directories are
+opened, under a named schema: no listing or schema-inference job runs.
 
 Work per task is bounded by shard_size regardless of term skew — the
 same property the build's (term, shard) grouping gives — so a 1000-
@@ -21,10 +22,15 @@ term's shards out, not by melting one task.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import LongType
 
+from .artifacts import postings_by_key
 from .index import Bm25Index
 from .scoring import Cache
 from .wand import TermPostings, _bytes_of, prune_blocks_batch, taat_topk_batch
@@ -35,61 +41,6 @@ from .wand import TermPostings, _bytes_of, prune_blocks_batch, taat_topk_batch
 #: shard task decodes everything (both paths are exact — this is a
 #: pure latency knob; ``prune_min_bytes=0`` forces the pruned path).
 PRUNE_MIN_BYTES = 256 << 10
-
-
-def _shard_fieldnorms(
-    docs_path: str, shard: int, shard_size: int
-) -> np.ndarray:
-    """One shard's uint8 fieldnorms indexed by shard-local id
-    (row-group-pruned Arrow read of the docs artifact)."""
-    import pyarrow.compute as pc
-    import pyarrow.dataset as ds
-
-    base = shard * shard_size
-    d = ds.dataset(docs_path, format="parquet")
-    t = d.to_table(
-        columns=["doc_id", "fieldnorm"], filter=pc.field("shard") == shard
-    )
-    ids = np.asarray(t["doc_id"])
-    arr = np.zeros(shard_size, dtype=np.uint8)
-    arr[ids - base] = np.asarray(t["fieldnorm"]).astype(np.uint8)
-    return arr
-
-
-def _termpostings_from_blocks(
-    pdf: "pd.DataFrame",
-    base: int,
-    term_info: dict,
-    n_docs: int,
-    avgdl: float,
-    k1: float,
-    b: float,
-) -> dict:
-    """Assemble one shard's block rows into TermPostings in
-    shard-local ids (global id - ``base``), keyed by term key in
-    ascending key order.
-    ``term_info``: key -> (df, wand_fn, wand_tf)."""
-    pdf = pdf.sort_values(["term_key", "block_ord"], kind="stable")
-    out: dict = {}
-    for term_key, g in pdf.groupby("term_key", sort=True):
-        bkey = bytes(term_key)
-        df_, wfn, wtf = term_info[bkey]
-        out[bkey] = TermPostings(
-            cache=Cache(n_docs, df_, k1, b, avgdl),
-            wand_fn=int(wfn),
-            wand_tf=int(wtf),
-            min_doc=g["min_doc"].to_numpy(np.int64) - base,
-            max_doc=g["max_doc"].to_numpy(np.int64) - base,
-            count=g["count"].to_numpy(np.int64),
-            block_fn=g["wand_fn"].to_numpy(np.int64),
-            block_tf=g["wand_tf"].to_numpy(np.int64),
-            ids_meta=g["ids_meta"].tolist(),
-            ids_bytes=[bytes(x) for x in g["ids_bytes"]],
-            tfs_meta=g["tfs_meta"].tolist(),
-            tfs_bytes=[bytes(x) for x in g["tfs_bytes"]],
-            shard_base=np.zeros(len(g), dtype=np.int64),
-        )
-    return out
 
 
 def _allowlist_frames(
@@ -109,12 +60,12 @@ def _allowlist_frames(
     O(tombstones), never O(n_docs). Both set: blocked ids are removed
     from the allowlist."""
     if prefilter is not None:
-        pc = idx.payload_cols
+        cols = idx.payload_cols
         allowed_df = (
             idx.docs_df()
             .join(
-                prefilter.select(*[F.col(c).alias(f"p_{c}") for c in pc]),
-                [f"p_{c}" for c in pc],
+                prefilter.select(*[F.col(c).alias(f"p_{c}") for c in cols]),
+                [f"p_{c}" for c in cols],
                 "left_semi",
             )
             .select("shard", "doc_id")
@@ -173,17 +124,18 @@ def search_distributed_batch(
     prune_min_bytes: int | None = None,
 ) -> DataFrame:
     """Distributed top-k: M queries answered by one fixed set of Spark
-    jobs, whatever M (5: AQE runs each exchange stage as a job) — the
-    one sealed-segment serving path (:func:`search_distributed` is a
-    batch of one).
+    jobs, whatever M (3: AQE runs the postings scan, the shard tasks
+    and the final one-task cut as one job each) — the one
+    sealed-segment serving path (:func:`search_distributed` is a batch
+    of one).
 
     Per-query job-scheduling overhead amortizes across the batch, each
     shard task reads its posting blocks once (the union of all
     queries' terms, still bucket/key-pruned), decodes each term once,
     and runs the taat kernel once per query against the shared decoded
-    arrays. The per-shard output is O(M * k) rows; the global cut is a
-    window per query_id and the payload join broadcasts the M*k-row
-    side.
+    arrays. The per-shard output is O(M * k) finished rows, payloads
+    included; the global cut by (score desc, internal id) runs in the
+    one task that orders the result.
 
     ``queries``: {query_id: query_text}. Returns
     (query_id, payload cols..., score), ordered by
@@ -205,13 +157,21 @@ def search_distributed_batch(
     """
     idx = Bm25Index(spark, index_dir)
     qterms, stats = _analyze_batch(idx, queries)
-    return _ordered_by_query(
-        _sealed_topk_df(
-            idx, qterms, stats, k, round_score, prefilter, blocked,
-            prune_min_bytes,
-        ),
-        idx.payload_cols,
+    if not qterms:
+        return idx.empty_df(with_query_id=True)
+    # per-shard over-fetch: the shard heap cuts on *unrounded* scores,
+    # but the global cut orders by (rounded score, doc_id) — a doc
+    # whose raw score trails the k-th but rounds equal to it (and has a
+    # smaller doc_id) must survive the shard cut, so fetch k+slack per
+    # shard exactly like Bm25Index.search_df does
+    k_fetch = k + (128 if round_score is not None else 0)
+    rows = _sealed_topk_df(
+        idx, qterms, stats, k_fetch, prefilter, blocked, prune_min_bytes
     )
+    iid = _iid_name(idx.payload_cols)
+    return _ordered_by_query(
+        _rounded(rows, round_score), idx.payload_cols, k, tiebreak=[iid]
+    ).drop(iid)
 
 
 def _analyze_batch(
@@ -230,61 +190,75 @@ def _analyze_batch(
     return {qid: keys for qid, keys in qterms.items() if keys}, stats
 
 
-def _top_per_query(df: DataFrame, k: int, *order) -> DataFrame:
-    """Each query's first ``k`` rows by ``order``."""
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return df.withColumn("_rn", F.row_number().over(w)).filter(
-        F.col("_rn") <= k
-    ).drop("_rn")
+def _iid_name(payload_cols: list[str]) -> str:
+    """The name of the internal-id column beside the payload columns of
+    a sealed result row: ``_iid``, prefixed until no payload column
+    has it."""
+    name = "_iid"
+    while name in payload_cols:
+        name = "_" + name
+    return name
+
+
+def _rounded(df: DataFrame, round_score: int | None) -> DataFrame:
+    """``df`` with its ``score`` rounded to ``round_score`` places."""
+    if round_score is None:
+        return df
+    return df.withColumn("score", F.round("score", round_score))
 
 
 def _ordered_by_query(
-    df: DataFrame, payload_cols: list[str], k: int | None = None
+    df: DataFrame,
+    payload_cols: list[str],
+    k: int,
+    tiebreak: list[str] | None = None,
 ) -> DataFrame:
-    """Order a (query_id, payload cols..., score) result of a few M*k
-    rows by (query_id, score desc, payload cols) in ONE task: a global
-    ``orderBy`` would first run a range-partition sampling job over
-    these few rows. ``repartition`` (not ``coalesce``) keeps the
-    upstream docs scan of the payload join parallel. With ``k``, each
-    query is first cut to its k best in that same task: a window over
-    one partition adds no exchange."""
-    order = [F.desc("score"), *payload_cols]
-    df = df.repartition(1)
-    if k is not None:
-        df = _top_per_query(df, k, *order)
-    return df.sortWithinPartitions("query_id", *order)
+    """Cut each query of a (query_id, payload cols..., score) result to
+    its ``k`` best by (score desc, ``tiebreak``; payload cols by
+    default) and order it by (query_id, score desc, payload cols), in
+    ONE task: a global ``orderBy`` would first run a range-partition
+    sampling job over these few rows, and a window over one partition
+    adds no exchange. ``repartition`` (not ``coalesce``) keeps the
+    upstream shard tasks parallel."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("score"), *(tiebreak or payload_cols)
+    )
+    return (
+        df.repartition(1)
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= k)
+        .drop("_rn")
+        .sortWithinPartitions("query_id", F.desc("score"), *payload_cols)
+    )
 
 
 def _sealed_topk_df(
     idx: Bm25Index,
     qterms: dict[str, list[bytes]],
     stats: dict[bytes, dict],
-    k: int,
-    round_score: int | None,
+    k_fetch: int,
     prefilter: DataFrame | None,
     blocked: DataFrame | None,
     prune_min_bytes: int | None,
 ) -> DataFrame:
-    """:func:`search_distributed_batch` before the final ordering, over
-    an :func:`_analyze_batch` result."""
-    out_cols = "query_id STRING, doc_id BIGINT, score DOUBLE"
-    if not qterms:
-        return idx.empty_df(with_query_id=True)
+    """Each shard's raw-score top ``k_fetch`` per query over a non-empty
+    :func:`_analyze_batch` result, as finished rows
+    (query_id, payload cols..., score, internal id named
+    :func:`_iid_name`), uncut across shards and unordered."""
     present = sorted({key for keys in qterms.values() for key in keys})
 
     n_docs, avgdl, k1, b = idx.n_docs, idx.avgdl, idx.k1, idx.b
     shard_size = idx.shard_size
     docs_path = idx._path("docs")
+    p_cols = [f"p_{c}" for c in idx.payload_cols]
+    out_schema = idx.result_schema(with_query_id=True).add(
+        _iid_name(idx.payload_cols), LongType()
+    )
+    arrow_schema = to_arrow_schema(out_schema)
     term_info = {
         key: (stats[key]["df"], stats[key]["wand_fn"], stats[key]["wand_tf"])
         for key in present
     }
-    # per-shard over-fetch: the shard heap cuts on *unrounded* scores,
-    # but the global cut orders by (rounded score, doc_id) — a doc
-    # whose raw score trails the k-th but rounds equal to it (and has a
-    # smaller doc_id) must survive the shard cut, so fetch k+slack per
-    # shard exactly like Bm25Index.search_df does
-    k_fetch = k + (128 if round_score is not None else 0)
     prune_gate = PRUNE_MIN_BYTES if prune_min_bytes is None else prune_min_bytes
     blocks = (
         idx.postings_df(idx._buckets(present))
@@ -301,16 +275,37 @@ def _sealed_topk_df(
 
     # the task's inputs ride in its closure, not an explicit broadcast
     # that would outlive the call (PySpark broadcasts a command over
-    # 1 MiB by itself)
-    def run_shard_batch(key, pdf, allowed_pdf=None):
-        shard = int(key[0])
+    # 1 MiB by itself); each task unpickles its own ``opened``, so the
+    # docs dataset is discovered once per task and never outlives it
+    opened: dict = {}
+
+    def run_shard_batch(key, blocks_t: pa.Table, allowed_t: pa.Table | None):
+        shard = key[0].as_py()
         base = shard * shard_size
-        fns = _shard_fieldnorms(docs_path, shard, shard_size)
-        tps = _termpostings_from_blocks(
-            pdf, base, term_info, n_docs, avgdl, k1, b
+        if not opened:
+            opened["docs"] = ds.dataset(docs_path, format="parquet")
+        # ONE read of this shard's docs rows: fieldnorms by local id,
+        # and the payload row of every local id
+        docs = opened["docs"].to_table(
+            columns=["doc_id", "fieldnorm", *p_cols],
+            filter=pc.field("shard") == shard,
         )
+        local = np.asarray(docs["doc_id"]) - base
+        fns = np.zeros(shard_size, dtype=np.uint8)
+        fns[local] = np.asarray(docs["fieldnorm"]).astype(np.uint8)
+        row_of = np.zeros(shard_size, dtype=np.int64)
+        row_of[local] = np.arange(len(local))
+        tps = {}
+        for tkey, p in postings_by_key(blocks_t, shard_size, base).items():
+            df_, wfn, wtf = term_info[tkey]
+            tps[tkey] = TermPostings(
+                cache=Cache(n_docs, df_, k1, b, avgdl),
+                wand_fn=int(wfn),
+                wand_tf=int(wtf),
+                **p,
+            )
         allowed_mask = None
-        if allowed_pdf is not None:
+        if allowed_t is not None:
             # ONE shard-local mask shared by every query in the batch:
             # allowlist = prefilter (P3), blocklist = tombstones (P4).
             # A blocklist mask starts all-true and only the listed ids
@@ -318,7 +313,7 @@ def _sealed_topk_df(
             # O(tombstones) rows through the cogroup. An empty right
             # side means "allow everything" for a blocklist and "allow
             # nothing" for an allowlist — both fall out of the fill
-            ids = allowed_pdf["doc_id"].to_numpy(np.int64) - base
+            ids = np.asarray(allowed_t["doc_id"], dtype=np.int64) - base
             allowed_mask = np.full(shard_size, mask_blocklist)
             allowed_mask[ids[(ids >= 0) & (ids < shard_size)]] = (
                 not mask_blocklist
@@ -334,53 +329,34 @@ def _sealed_topk_df(
         else:
             for tp in tps.values():
                 tp.decoded = tp.decode_all()  # decode ONCE, reuse per query
-        out = pd.DataFrame(
-            taat_topk_batch(tps, qterms, fns, k_fetch, allowed_mask=allowed_mask),
-            columns=["query_id", "doc_id", "score"],
-        )
-        out["doc_id"] += base
-        return out
+        hits = taat_topk_batch(tps, qterms, fns, k_fetch, allowed_mask=allowed_mask)
+        if not hits:
+            return arrow_schema.empty_table()
+        qids, hit_local, scores = zip(*hits)
+        hit_local = np.asarray(hit_local, dtype=np.int64)
+        return pa.Table.from_arrays(
+            [
+                pa.array(qids, pa.string()),
+                *docs.select(p_cols).take(row_of[hit_local]).columns,
+                pa.array(scores, pa.float64()),
+                pa.array(hit_local + base),
+            ],
+            names=out_schema.fieldNames(),
+        ).cast(arrow_schema)
 
     if allowed_df is None:
-        def run_batch_grouped(key, pdf):
-            return run_shard_batch(key, pdf, None)
+        def run_batch_grouped(key, blocks_t):
+            return run_shard_batch(key, blocks_t, None)
 
-        per_shard = blocks.groupBy("shard").applyInPandas(
-            run_batch_grouped, out_cols
-        )
-    else:
-        def run_batch_cogrouped(key, left: pd.DataFrame, right: pd.DataFrame):
-            if left.empty:
-                return pd.DataFrame(columns=["query_id", "doc_id", "score"])
-            return run_shard_batch(key, left, right)
+        return blocks.groupBy("shard").applyInArrow(run_batch_grouped, out_schema)
 
-        per_shard = (
-            blocks.groupBy("shard")
-            .cogroup(allowed_df.groupBy("shard"))
-            .applyInPandas(run_batch_cogrouped, out_cols)
-        )
-    score_col = (
-        F.round(F.col("score"), round_score)
-        if round_score is not None
-        else F.col("score")
-    )
-    topk = _top_per_query(
-        per_shard.select("query_id", "doc_id", score_col.alias("score")),
-        k, F.desc("score"), F.asc("doc_id"),
-    )
-    # J3: payload join on the dense id (internal id aliased so a
-    # payload column may itself be named doc_id)
-    docs = idx.docs_df().select(
-        F.col("doc_id").alias("_iid"),
-        *[F.col(f"p_{c}") for c in idx.payload_cols],
-    )
+    def run_batch_cogrouped(key, blocks_t, allowed_t):
+        if not blocks_t.num_rows:
+            return arrow_schema.empty_table()
+        return run_shard_batch(key, blocks_t, allowed_t)
+
     return (
-        # M*k-row side broadcast: the docs artifact is never shuffled
-        # for the payload lookup, only scanned
-        docs.join(F.broadcast(topk), topk["doc_id"] == docs["_iid"])
-        .select(
-            "query_id",
-            *[F.col(f"p_{c}").alias(c) for c in idx.payload_cols],
-            topk["score"],
-        )
+        blocks.groupBy("shard")
+        .cogroup(allowed_df.groupBy("shard"))
+        .applyInArrow(run_batch_cogrouped, out_schema)
     )

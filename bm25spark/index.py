@@ -7,7 +7,9 @@ terms' posting blocks (Parquet directory pruning on ``bucket`` +
 row-group predicate pushdown on ``term_key`` — the Spark form of the
 reference's token B-tree descent, address_tokens.rs:61-98) -> run a
 kernel from :mod:`bm25spark.wand` -> map internal doc ids back to
-payload columns (J3; a join on the dense id, address_documents.rs).
+payload columns (J3, address_documents.rs: the distributed path labels
+each hit in the shard task that scores it, from that shard's docs rows;
+the driver path reads the payload rows of its k hits).
 """
 
 from __future__ import annotations
@@ -22,17 +24,11 @@ from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from . import artifacts
 from . import fs as fsio
+from .artifacts import read_parquet
 from .analyze import analyze_query, check_analyzer_fingerprint, get_analyzer
 from .build import POSTINGS_SCHEMA, term_bucket
 from .scoring import Cache
 from .wand import TermPostings, bmw_topk, taat_topk
-
-
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Open a flat Parquet directory with no schema-inference job, under
-    the schema in its footer (:func:`artifacts.spark_schema`)."""
-    schema = artifacts.spark_schema(path)
-    return (spark.read.schema(schema) if schema else spark.read).parquet(path)
 
 
 class Bm25Index:
@@ -119,13 +115,17 @@ class Bm25Index:
 
     def result_schema(self, with_query_id: bool = False):
         """``([query_id,] payload cols..., score)`` — the schema of every
-        search result frame."""
-        payload = self.docs_df().select(
-            *[F.col(f"p_{c}").alias(c) for c in self.payload_cols]
-        ).schema.fields
+        search result frame, its payload types read from the docs
+        footer (no DataFrame is built)."""
+        docs = (
+            artifacts.spark_schema(self._path("docs")) or self.docs_df().schema
+        )
+        payload = [
+            StructField(c, docs[f"p_{c}"].dataType) for c in self.payload_cols
+        ]
         return StructType(
             ([StructField("query_id", StringType())] if with_query_id else [])
-            + list(payload)
+            + payload
             + [StructField("score", DoubleType())]
         )
 

@@ -53,6 +53,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from . import fs as fsio
+from .artifacts import read_parquet
 from .build import (
     _assign_doc_ids,
     _ensure_readable_parquet,
@@ -62,7 +63,7 @@ from .build import (
     finalize_index,
 )
 from .config import Bm25Config
-from .index import Bm25Index, read_parquet
+from .index import Bm25Index
 from .udfs import with_doc_terms
 
 #: auto-seal threshold (live delta rows) used when none is given —
@@ -1034,11 +1035,13 @@ def search_with_delta_batch_df(
 ) -> DataFrame:
     """O6 growing∪sealed top-k for M queries — the one delta-aware
     serving path (:func:`search_with_delta_df` is a batch of one). The
-    sealed leg is :func:`bm25spark.distributed.search_distributed_batch`
-    (decode-once per term per shard, tombstones as the per-shard
-    blocklist); the growing leg runs the same ``taat_topk`` kernel over
-    each partition of the live delta (:func:`_delta_kernel_df`); then a
-    per-query windowed re-rank. With ``round_score`` set, both legs
+    sealed leg is the shard tasks of
+    :func:`bm25spark.distributed.search_distributed_batch` (decode-once
+    per term per shard, tombstones as the per-shard blocklist, finished
+    rows with payloads); the growing leg runs the same ``taat_topk``
+    kernel over each partition of the live delta
+    (:func:`_delta_kernel_df`); then ONE per-query windowed re-rank over
+    both, in the task that orders the result. With ``round_score`` set, both legs
     over-fetch by ``slack`` so the rounded boundary cannot drop a tied
     survivor (same convention as ``Bm25Index.search_df``).
 
@@ -1051,7 +1054,9 @@ def search_with_delta_batch_df(
 
     Returns (query_id, payload cols..., score), ordered by
     (query_id, score desc, payload cols)."""
-    from .distributed import _analyze_batch, _ordered_by_query, _sealed_topk_df
+    from .distributed import (
+        _analyze_batch, _ordered_by_query, _rounded, _sealed_topk_df,
+    )
 
     idx = Bm25Index(spark, index_dir)
     gen = _gen_of(idx.meta)
@@ -1063,12 +1068,13 @@ def search_with_delta_batch_df(
         return idx.empty_df(with_query_id=True)
 
     k_fetch = k + (slack if round_score is not None else 0)
+    # each shard's raw-score top k_fetch, uncut across shards: the one
+    # cut is the final one below
     merged = _sealed_topk_df(
         idx,
         qterms,
         stats,
         k_fetch,
-        round_score=None,
         prefilter=prefilter,
         blocked=_tombstones_df(spark, index_dir, gen=gen),
         prune_min_bytes=None,
@@ -1084,11 +1090,4 @@ def search_with_delta_batch_df(
             _delta_kernel_df(idx, delta, qterms, stats, k_fetch, text_col)
         )
 
-    score_col = (
-        F.round(F.col("score"), round_score)
-        if round_score is not None
-        else F.col("score")
-    )
-    return _ordered_by_query(
-        merged.select("query_id", *pc, score_col.alias("score")), pc, k=k
-    )
+    return _ordered_by_query(_rounded(merged, round_score), pc, k)

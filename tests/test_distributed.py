@@ -298,3 +298,88 @@ def test_failed_shard_task_leaves_session_clean(spark, dist_index, monkeypatch):
 
     monkeypatch.undo()
     assert distributed.search_distributed_batch(spark, d, qs, 10).collect() == expected
+
+
+@pytest.fixture(scope="module")
+def typed_index(spark, tmp_path_factory):
+    """A sealed index whose payload holds a timestamp with microseconds,
+    a decimal and a column named doc_id (the sibling of
+    test_index.test_footer_schema_equals_spark_inference's index)."""
+    import datetime
+    import decimal
+
+    rows = [
+        (
+            i * 7,
+            datetime.datetime(2024, 1, 1 + i % 28, 12, i % 60, 0, 997 * i + 7),
+            decimal.Decimal(f"{i}.25"),
+            f"w{i % 7} w{i % 5} common",
+        )
+        for i in range(300)
+    ]
+    df = spark.createDataFrame(
+        rows, "doc_id INT, ts TIMESTAMP, amount DECIMAL(12,2), text STRING"
+    )
+    d = str(tmp_path_factory.mktemp("typed") / "idx")
+    build_index(  # 3 shards
+        spark, df, d, "text", ["doc_id"],
+        payload_cols=["doc_id", "ts", "amount"], cfg=Bm25Config(shard_size=128),
+    )
+    return d
+
+
+def test_shard_rows_carry_payload_types(spark, typed_index):
+    """The payload a shard task attaches from its Arrow read of the docs
+    artifact equals what a Spark join of ``docs_df()`` on the same
+    internal ids returns: no timezone shift, no decimal rescale, no
+    microsecond loss — on both sealed serving calls, with and without
+    an allowlist (cogroup)."""
+    from pyspark.sql import functions as F
+
+    from bm25spark.distributed import search_distributed_batch
+    from bm25spark.maintain import search_with_delta_batch_df
+
+    idx = Bm25Index(spark, typed_index)
+    qs = {"a": "w1 w3", "b": "common", "c": "w6 w4 w0"}
+    docs = idx.docs_df()
+    allowed = [r.doc_id for r in docs.filter("p_doc_id % 2 = 0").collect()]
+    mask = np.zeros(idx.n_docs, dtype=bool)
+    mask[allowed] = True
+    prefilter = docs.filter("p_doc_id % 2 = 0").select(
+        F.col("p_doc_id").alias("doc_id"),
+        F.col("p_ts").alias("ts"),
+        F.col("p_amount").alias("amount"),
+    )
+
+    def joined(allowed_mask):
+        """(query_id, payload..., score) of every hit of the driver
+        kernel, labeled by a Spark join of docs_df() on its ids."""
+        hits = [
+            (qid, doc, score)
+            for qid, text in qs.items()
+            for doc, score in idx.search(text, 400, allowed_mask=allowed_mask)
+        ]
+        h = spark.createDataFrame(hits, "query_id STRING, iid BIGINT, score DOUBLE")
+        out = h.join(docs, h["iid"] == docs["doc_id"]).select(
+            "query_id",
+            F.col("p_doc_id").alias("doc_id"),
+            F.col("p_ts").alias("ts"),
+            F.col("p_amount").alias("amount"),
+            "score",
+        )
+        return out.schema, sorted(out.collect())
+
+    for allowed_mask, pre in ((None, None), (mask, prefilter)):
+        schema, want = joined(allowed_mask)
+        assert want
+        for out in (
+            search_distributed_batch(
+                spark, typed_index, qs, 400, round_score=None, prefilter=pre
+            ),
+            search_with_delta_batch_df(
+                spark, typed_index, qs, 400, "text", round_score=None,
+                prefilter=pre,
+            ),
+        ):
+            assert out.schema == schema
+            assert sorted(out.collect()) == want

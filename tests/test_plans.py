@@ -69,26 +69,46 @@ def test_lsh_candidate_join_is_broadcast_hash(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_payload_join_broadcasts_topk_side(spark, tmp_path):
-    from bm25spark.api import index_for_parquet
-    from bm25spark.distributed import search_distributed
-
-    idx = index_for_parquet(spark, f"{SF}/documents.parquet", "text", ["doc_id"])
-    plan = plan_of(search_distributed(idx.spark, idx.index_dir, "merge", 5))
-    assert "BroadcastHashJoin" in plan
+def _reads_no_docs(plan: str, idx) -> bool:
+    """No scan of the docs artifact (its path, or the ``p_``-prefixed
+    payload columns only that artifact holds) anywhere in ``plan``, so
+    no join can be fed by it."""
+    return idx._path("docs") not in plan and "p_doc_id" not in plan
 
 
-def test_delta_batch_plan_broadcasts_and_single_python_crossing(spark, tmp_path):
-    """Batched delta leg: the payload join broadcasts, and the only
-    Python operators in the whole batched growing∪sealed plan family
-    are the fused Arrow tokenizer plus the kernel tasks (per shard and
-    per delta partition) — no row-at-a-time Python anywhere."""
-    from bm25spark.api import index_for_parquet
+def test_sealed_plan_reads_no_docs_and_two_exchanges(spark, budget_index):
+    """Shard tasks return finished rows: the sealed plan scans only
+    postings, has no join, and shuffles twice (blocks to their shard
+    task, finished rows to the one ordering task)."""
+    import re
+
+    from bm25spark.distributed import search_distributed_batch
+    from bm25spark.index import Bm25Index
+
+    idx = Bm25Index(spark, budget_index)
+    plan = plan_of(search_distributed_batch(spark, budget_index, BUDGET_QUERIES, 5))
+    assert _reads_no_docs(plan, idx), plan
+    assert "Join" not in plan, plan
+    assert len(re.findall(r"\bExchange\b", plan)) == 2, plan
+
+
+def test_delta_batch_plan_reads_no_docs_and_single_python_crossing(
+    spark, budget_index, tmp_path
+):
+    """Batched delta leg: neither leg scans the docs artifact, and the
+    only Python operators in the whole batched growing∪sealed plan
+    family are the fused Arrow tokenizer plus the kernel tasks (per
+    shard and per delta partition) — no row-at-a-time Python anywhere.
+    Runs on a private copy: the insert must not grow a shared index."""
+    import shutil
+
+    from bm25spark.index import Bm25Index
     from bm25spark.maintain import insert, search_with_delta_batch_df
 
-    idx = index_for_parquet(spark, f"{SF}/documents.parquet", "text", ["doc_id"])
+    d = str(tmp_path / "idx")
+    shutil.copytree(budget_index, d)
     insert(
-        spark, idx.index_dir,
+        spark, d,
         spark.read.parquet(f"{SF}/documents.parquet").limit(20).select(
             (F.col("doc_id") + 100000).alias("doc_id"), "text"
         ),
@@ -96,13 +116,13 @@ def test_delta_batch_plan_broadcasts_and_single_python_crossing(spark, tmp_path)
     )
     plan = plan_of(
         search_with_delta_batch_df(
-            spark, idx.index_dir, {"a": "merge spark", "b": "window"}, 5, "text"
+            spark, d, {"a": "merge spark", "b": "window"}, 5, "text"
         )
     )
     assert "BatchEvalPython" not in plan  # no row-at-a-time Python
-    assert "BroadcastHashJoin" in plan    # payload join
+    assert _reads_no_docs(plan, Bm25Index(spark, d)), plan
     # exactly one Arrow tokenizer crossing in the delta leg, plus the
-    # kernel tasks (FlatMapGroupsInPandas / cogroup / MapInArrow)
+    # kernel tasks (FlatMapGroupsInArrow / cogroup / MapInArrow)
     assert plan.count("ArrowEvalPython") <= 1, plan.count("ArrowEvalPython")
 
 
@@ -129,14 +149,17 @@ def test_substring_spans_shuffle_carries_hash_not_gram(spark, docs):
 
 
 # ---- job budgets ------------------------------------------------------------
-# Jobs per serving call at SF: a sealed batch runs the shard-task stage,
-# the broadcast build, the docs scan of the payload join and the final
-# one-task ordering as AQE jobs; an added partition-discovery or
-# schema-inference job (an artifact opened by ``spark.read.parquet``
-# inference) or an added exchange breaks the budget. Counts, not times.
-SEALED_BATCH_JOBS = 5
-DELTA_SEALED_JOBS = 5
-DELTA_GROWING_JOBS = 9
+# Jobs per call at SF: a sealed batch runs the postings scan, the shard
+# tasks and the final one-task cut as AQE jobs; an added
+# partition-discovery or schema-inference job (an artifact opened by
+# ``spark.read.parquet`` inference), an added exchange or a payload
+# join breaks the budget. Counts, not times.
+SEALED_BATCH_JOBS = 3
+DELTA_SEALED_JOBS = 3
+DELTA_GROWING_JOBS = 7
+INSERT_JOBS = 2
+DELETE_JOBS = 5
+VACUUM_JOBS = 21
 BUDGET_QUERIES = {"a": "merge spark", "b": "window", "c": "spark join plan"}
 
 
@@ -198,3 +221,28 @@ def test_delta_batch_search_job_budgets(spark, budget_index, tmp_path):
     delete(spark, d, docs.limit(5).select("doc_id"))
     n = jobs_of(spark, "budget-delta-growing", search)
     assert n <= DELTA_GROWING_JOBS, n
+
+
+def test_mutation_job_budgets(spark, budget_index, tmp_path):
+    """insert, delete and vacuum (which re-runs the build stages over
+    the relabeled staging) stay inside their job counts."""
+    import shutil
+
+    from bm25spark.maintain import delete, insert, vacuum
+
+    d = str(tmp_path / "idx")
+    shutil.copytree(budget_index, d)
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    n = jobs_of(spark, "budget-insert", lambda: insert(
+        spark, d,
+        docs.limit(20).select((F.col("doc_id") + 100000).alias("doc_id"), "text"),
+        "text",
+    ))
+    assert n <= INSERT_JOBS, n
+    n = jobs_of(
+        spark, "budget-delete",
+        lambda: delete(spark, d, docs.limit(5).select("doc_id")),
+    )
+    assert n <= DELETE_JOBS, n
+    n = jobs_of(spark, "budget-vacuum", lambda: vacuum(spark, d, "text"))
+    assert n <= VACUUM_JOBS, n
